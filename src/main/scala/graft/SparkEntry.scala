@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.TextAnalysis
-import graft.operators.{AuditDiff, Constraints, Curation, Dedup, Funnel, Layout, Relational, Similarity, Skew}
+import graft.operators.{AuditDiff, Constraints, Curation, Dedup, Funnel, Layout, Relational, Similarity, Skew, Stores}
 import graft.sources.Multimodal
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -1651,7 +1651,7 @@ object SparkEntry {
       Dedup.saveLabelStore(
         Dedup.connectedComponents(docs.select(col("doc_id")), "doc_id",
           pairs, upstream = cache), store)
-      Dedup.deleteFromLabelStore(s, store,
+      Stores.label.delete(s, store,
         docs.filter(col("doc_id") % 9 === 4).select("doc_id"), "doc_id")
       Dedup.resolveLabels(s, store)
         .select(col("id").as("doc_id"), col("component"))
@@ -1880,7 +1880,7 @@ object SparkEntry {
       graft.operators.Retrieval.savePostingsIndexCommitted(
         graft.operators.Retrieval.buildPostingsIndex(
           docs.filter(col("doc_id") % 10 =!= 0), "doc_id", "text"), idxDir)
-      val g0 = graft.operators.Retrieval.postingsGen(s, idxDir)
+      val g0 = Stores.postings.gen(s, idxDir)
       graft.operators.Retrieval.appendPostingsIndexCommitted(s, idxDir,
         docs.filter(col("doc_id") % 20 === 0), "doc_id", "text",
         expectedGen = Some(g0))
@@ -1894,7 +1894,7 @@ object SparkEntry {
           docs.filter(col("doc_id") % 20 === 10), "doc_id", "text",
           expectedGen = Some(g0)))
       require(lost.isFailure, "stale optimistic commit must refuse")
-      require(graft.operators.Retrieval.vacuumPostingsIndex(s, idxDir)
+      require(Stores.postings.vacuum(s, idxDir)
         .nonEmpty, "the lost commit's orphans must be reclaimable")
       val queries = docs.filter(col("doc_id") % 200 === 7)
         .select(col("doc_id").as("qid"),
@@ -1923,7 +1923,7 @@ object SparkEntry {
           "vec_id", "embedding"), idxDir)
       Similarity.appendPqIndexCommitted(s, idxDir,
         emb.filter(col("vec_id") % 20 === 0), "vec_id", "embedding",
-        expectedGen = Some(Similarity.pqGen(s, idxDir)))
+        expectedGen = Some(Stores.pq.gen(s, idxDir)))
       // the torn writer: data files land, the manifest row never does
       Similarity.appendPqIndex(s, idxDir,
         emb.filter(col("vec_id") % 20 === 10), "vec_id", "embedding")
@@ -2219,9 +2219,9 @@ object SparkEntry {
       graft.operators.Retrieval.appendPositionalIndex(s, idxDir,
         docs.filter(col("doc_id") % 10 === 0), "doc_id", "text")
       val victims = docs.filter(col("doc_id") % 7 === 3).select("doc_id")
-      graft.operators.Retrieval.deleteFromPositionalIndex(s, idxDir,
+      Stores.positional.delete(s, idxDir,
         victims, "doc_id")
-      graft.operators.Retrieval.deleteFromPositionalIndex(s, idxDir,
+      Stores.positional.delete(s, idxDir,
         victims, "doc_id")
       val phrases = docs
         .filter(col("doc_id") % 2000 === 11 &&
@@ -2359,7 +2359,7 @@ object SparkEntry {
           "vec_id", "embedding"), idxDir)
       Similarity.appendPqIndex(s, idxDir,
         emb.filter(col("vec_id") % 10 === 0), "vec_id", "embedding")
-      Similarity.deleteFromPqIndex(s, idxDir,
+      Stores.pq.delete(s, idxDir,
         emb.filter(col("vec_id") % 7 === 3).select("vec_id"), "vec_id")
       Similarity.pqSearchIndex(emb.filter(col("vec_id") % 25 === 0),
         Similarity.loadPqIndex(s, idxDir), "vec_id", "embedding", k = 10)
@@ -2383,7 +2383,7 @@ object SparkEntry {
       val drop = docs.filter(col("doc_id") % 10 === 0)
       Dedup.saveBandIndex(Dedup.buildBandIndex(corpus, "doc_id", "text"),
         idxDir)
-      Dedup.deleteFromBandIndex(s, idxDir,
+      Stores.band.delete(s, idxDir,
         corpus.filter(col("doc_id") % 7 === 3).select("doc_id"), "doc_id")
       Dedup.minHashLshProbe(Dedup.loadBandIndex(s, idxDir), drop,
         "doc_id", "text")
@@ -3357,7 +3357,7 @@ object SparkEntry {
           "doc_id", "text"), idxDir)
       Dedup.appendBandIndexCommitted(s, idxDir,
         docs.filter(col("doc_id") % 10 === 5), "doc_id", "text",
-        expectedGen = Some(Dedup.bandGen(s, idxDir)))
+        expectedGen = Some(Stores.band.gen(s, idxDir)))
       // the torn writer: data files land, the manifest row never does
       Dedup.appendBandIndex(s, idxDir,
         docs.filter(col("doc_id") % 20 === 0), "doc_id", "text")
@@ -3377,7 +3377,7 @@ object SparkEntry {
       graft.operators.Retrieval.savePositionalIndexCommitted(
         graft.operators.Retrieval.buildPositionalIndex(
           docs.filter(col("doc_id") % 10 =!= 0), "doc_id", "text"), idxDir)
-      val g0 = graft.operators.Retrieval.positionalGen(s, idxDir)
+      val g0 = Stores.positional.gen(s, idxDir)
       graft.operators.Retrieval.appendPositionalIndexCommitted(s, idxDir,
         docs.filter(col("doc_id") % 10 === 0), "doc_id", "text",
         expectedGen = Some(g0))
@@ -3461,7 +3461,7 @@ object SparkEntry {
           "doc_id", "text"), idxDir)
       Dedup.appendWinnowIndexCommitted(s, idxDir,
         docs.filter(col("doc_id") % 10 === 5), "doc_id", "text",
-        expectedGen = Some(Dedup.winnowGen(s, idxDir)))
+        expectedGen = Some(Stores.winnow.gen(s, idxDir)))
       // the torn writer: fp files land, the manifest row never does
       Dedup.appendWinnowIndex(s, idxDir,
         docs.filter(col("doc_id") % 20 === 0), "doc_id", "text")
@@ -3520,8 +3520,8 @@ object SparkEntry {
       Dedup.saveWinnowIndex(
         Dedup.buildWinnowIndex(corpus, "doc_id", "text"), idxDir)
       val dead = corpus.filter(col("doc_id") % 7 === 3).select("doc_id")
-      Dedup.deleteFromWinnowIndex(s, idxDir, dead, "doc_id")
-      Dedup.deleteFromWinnowIndex(s, idxDir, dead, "doc_id") // idempotent
+      Stores.winnow.delete(s, idxDir, dead, "doc_id")
+      Stores.winnow.delete(s, idxDir, dead, "doc_id") // idempotent
       Dedup.winnowProbe(Dedup.loadWinnowIndex(s, idxDir),
         docs.filter(col("doc_id") % 10 === 0), "doc_id", "text",
         minShared = 2L, maxDf = 50L)
@@ -3740,9 +3740,9 @@ object SparkEntry {
       for (r <- 0 to 3)
         graft.operators.Retrieval.appendPostingsIndexCommitted(s, idxDir,
           docs.filter(col("doc_id") % 40 === r * 10L), "doc_id", "text")
-      require(!graft.operators.Retrieval.compactPostingsL0(s, idxDir,
+      require(!Stores.postings.compactL0(s, idxDir,
         minRuns = 5), "q228: 4 runs must not trigger a minRuns=5 compact")
-      require(graft.operators.Retrieval.compactPostingsL0(s, idxDir,
+      require(Stores.postings.compactL0(s, idxDir,
         minRuns = 3), "q228: 4 runs must trigger a minRuns=3 compact")
       val queries = docs.filter(col("doc_id") % 200 === 7)
         .select(col("doc_id").as("qid"),
@@ -3825,8 +3825,8 @@ object SparkEntry {
     }),
 
     // AUTO-TRIGGERED compaction (q228 gave the mechanism; this row is
-    // the POLICY): an ingest loop calls maintainPostingsL0 after every
-    // committed append, and the store self-regulates — with maxRuns=3
+    // the POLICY): an ingest loop calls Stores.postings.maintain after
+    // every committed append, and the store self-regulates — with maxRuns=3
     // the L0 stack grows 1, 2 (no trigger), hits 3 → compacts and
     // re-bases, then grows 1, 2 again from the fresh base. The require
     // chain pins the exact fire pattern AND that the re-based manifest
@@ -3845,11 +3845,11 @@ object SparkEntry {
       val fired = (0 to 4).map { r =>
         graft.operators.Retrieval.appendPostingsIndexCommitted(s, idxDir,
           docs.filter(col("doc_id") % 50 === r * 10L), "doc_id", "text")
-        graft.operators.Retrieval.maintainPostingsL0(s, idxDir, policy)
+        Stores.postings.maintain(s, idxDir, policy)
       }
       require(fired == Seq(false, false, true, false, false),
         s"q233: expected the policy to fire exactly on the 3rd append, got $fired")
-      require(graft.operators.Retrieval.postingsGen(s, idxDir) == 2L,
+      require(Stores.postings.gen(s, idxDir) == 2L,
         "q233: post-compaction appends must restart from the re-based gen 0")
       val queries = docs.filter(col("doc_id") % 200 === 7)
         .select(col("doc_id").as("qid"),
@@ -3977,7 +3977,7 @@ object SparkEntry {
       q.stop()
       // the maxRuns=2 policy fired on the second trigger: history
       // re-based to generation 0 with the ledger carried forward
-      require(Dedup.bandGen(s, idxDir) == 0L,
+      require(Stores.band.gen(s, idxDir) == 0L,
         "q238: the compaction policy must have re-based mid-stream")
       require(graft.operators.StoreFiles.committedBatchIds(s, idxDir)
           == Set(0L, 1L),
@@ -3986,7 +3986,7 @@ object SparkEntry {
       // ledger must swallow it (no append, no new generation)
       graft.streaming.DocumentStreams.bandIngestCommittedBatch(
         s, idxDir, policy)(docs.filter(col("doc_id") % 20 === 10), 1L)
-      require(Dedup.bandGen(s, idxDir) == 0L &&
+      require(Stores.band.gen(s, idxDir) == 0L &&
           graft.operators.StoreFiles.committedBatchIds(s, idxDir)
             == Set(0L, 1L),
         "q238: a re-delivered batch must append nothing")
@@ -4098,7 +4098,7 @@ object SparkEntry {
         q.processAllAvailable()
       }
       q.stop()
-      require(graft.operators.Retrieval.postingsGen(s, idxDir) == 0L,
+      require(Stores.postings.gen(s, idxDir) == 0L,
         "q241: the compaction policy must have re-based mid-stream")
       require(graft.operators.StoreFiles.committedBatchIds(s, idxDir)
           == Set(0L, 1L),
@@ -4106,7 +4106,7 @@ object SparkEntry {
       // exactly-once: re-deliver trigger 1 straight at the store
       graft.streaming.DocumentStreams.postingsIngestCommittedBatch(
         s, idxDir, policy)(docs.filter(col("doc_id") % 20 === 10), 1L)
-      require(graft.operators.Retrieval.postingsGen(s, idxDir) == 0L &&
+      require(Stores.postings.gen(s, idxDir) == 0L &&
           graft.operators.StoreFiles.committedBatchIds(s, idxDir)
             == Set(0L, 1L),
         "q241: a re-delivered batch must append nothing")
@@ -4154,14 +4154,14 @@ object SparkEntry {
         q.processAllAvailable()
       }
       q.stop()
-      require(Dedup.winnowGen(s, idxDir) == 0L,
+      require(Stores.winnow.gen(s, idxDir) == 0L,
         "q242: the compaction policy must have re-based mid-stream")
       require(graft.operators.StoreFiles.committedBatchIds(s, idxDir)
           == Set(0L, 1L),
         "q242: both batch ids must survive the L0 re-base")
       graft.streaming.DocumentStreams.winnowIngestCommittedBatch(
         s, idxDir, policy)(docs.filter(col("doc_id") % 20 === 10), 1L)
-      require(Dedup.winnowGen(s, idxDir) == 0L &&
+      require(Stores.winnow.gen(s, idxDir) == 0L &&
           graft.operators.StoreFiles.committedBatchIds(s, idxDir)
             == Set(0L, 1L),
         "q242: a re-delivered batch must append nothing")
@@ -4367,14 +4367,14 @@ object SparkEntry {
         q.processAllAvailable()
       }
       q.stop()
-      require(Similarity.ivfGen(s, idxDir) == 0L,
+      require(Stores.ivf.gen(s, idxDir) == 0L,
         "q248: the compaction policy must have re-based mid-stream")
       require(graft.operators.StoreFiles.committedBatchIds(s, idxDir)
           == Set(0L, 1L),
         "q248: both batch ids must survive the L0 re-base")
       graft.streaming.DocumentStreams.ivfIngestCommittedBatch(
         s, idxDir, policy)(emb.filter(col("vec_id") % 20 === 10), 1L)
-      require(Similarity.ivfGen(s, idxDir) == 0L &&
+      require(Stores.ivf.gen(s, idxDir) == 0L &&
           graft.operators.StoreFiles.committedBatchIds(s, idxDir)
             == Set(0L, 1L),
         "q248: a re-delivered batch must append nothing")
@@ -4413,14 +4413,14 @@ object SparkEntry {
         q.processAllAvailable()
       }
       q.stop()
-      require(Similarity.pqGen(s, idxDir) == 0L,
+      require(Stores.pq.gen(s, idxDir) == 0L,
         "q249: the compaction policy must have re-based mid-stream")
       require(graft.operators.StoreFiles.committedBatchIds(s, idxDir)
           == Set(0L, 1L),
         "q249: both batch ids must survive the L0 re-base")
       graft.streaming.DocumentStreams.pqIngestCommittedBatch(
         s, idxDir, policy)(emb.filter(col("vec_id") % 20 === 10), 1L)
-      require(Similarity.pqGen(s, idxDir) == 0L &&
+      require(Stores.pq.gen(s, idxDir) == 0L &&
           graft.operators.StoreFiles.committedBatchIds(s, idxDir)
             == Set(0L, 1L),
         "q249: a re-delivered batch must append nothing")
@@ -4485,14 +4485,14 @@ object SparkEntry {
         q.processAllAvailable()
       }
       q.stop()
-      require(graft.operators.MatView.aggGen(s, mvDir) == 0L,
+      require(Stores.agg.gen(s, mvDir) == 0L,
         "q252: the compaction policy must have re-based mid-stream")
       require(graft.operators.StoreFiles.committedBatchIds(s, mvDir)
           == Set(0L, 1L),
         "q252: both batch ids must survive the L0 re-base")
       graft.streaming.DocumentStreams.aggIngestCommittedBatch(
         s, mvDir, policy)(docs.filter(col("doc_id") % 20 === 10), 1L)
-      require(graft.operators.MatView.aggGen(s, mvDir) == 0L &&
+      require(Stores.agg.gen(s, mvDir) == 0L &&
           graft.operators.StoreFiles.committedBatchIds(s, mvDir)
             == Set(0L, 1L),
         "q252: a re-delivered batch must append nothing")
@@ -4649,14 +4649,14 @@ object SparkEntry {
         q.processAllAvailable()
       }
       q.stop()
-      require(graft.operators.DocStore.docStoreGen(s, storeDir) == 0L,
+      require(Stores.docstore.gen(s, storeDir) == 0L,
         "q258: the compaction policy must have re-based mid-stream")
       require(graft.operators.StoreFiles.committedBatchIds(s, storeDir)
           == Set(0L, 1L),
         "q258: both batch ids must survive the L0 re-base")
       graft.streaming.DocumentStreams.docIngestCommittedBatch(
         s, storeDir, policy)(docs.filter(col("doc_id") % 20 === 10), 1L)
-      require(graft.operators.DocStore.docStoreGen(s, storeDir) == 0L &&
+      require(Stores.docstore.gen(s, storeDir) == 0L &&
           graft.operators.StoreFiles.committedBatchIds(s, storeDir)
             == Set(0L, 1L),
         "q258: a re-delivered batch must append nothing")
@@ -4706,7 +4706,7 @@ object SparkEntry {
         docs.filter(col("doc_id") % 10 =!= 0), numFiles = 8)
       graft.operators.DocStore.appendDocStoreCommitted(s, dsDir,
         docs.filter(col("doc_id") % 10 === 0))
-      require(graft.operators.DocStore.docStoreGen(s, dsDir) == 1L,
+      require(Stores.docstore.gen(s, dsDir) == 1L,
         "q260: the bronze table must have moved past the pinned gen")
       val pinned = graft.operators.DocStore.loadDocStoreSnapshot(
         s, dsDir, asOf = Some(0L))
@@ -4831,7 +4831,7 @@ object SparkEntry {
         q.processAllAvailable()
       }
       q.stop()
-      require(Similarity.ivfGen(s, idxDir) == 0L,
+      require(Stores.ivf.gen(s, idxDir) == 0L,
         "q264: the compaction policy must have re-based mid-stream")
       require(graft.operators.StoreFiles.committedBatchIds(s, idxDir)
           == Set(0L, 1L),
@@ -4856,7 +4856,7 @@ object SparkEntry {
       // before the gate even runs)
       graft.streaming.DocumentStreams.semanticIvfIngestCommittedBatch(
         s, idxDir, evalSet, 0.30, policy)(drop(10), 1L)
-      require(Similarity.ivfGen(s, idxDir) == 0L &&
+      require(Stores.ivf.gen(s, idxDir) == 0L &&
           Similarity.loadIvfIndexSnapshot(s, idxDir)
             .assignments.count() == stored,
         "q264: a re-delivered batch must append nothing")
@@ -4909,7 +4909,7 @@ object SparkEntry {
   private def docStoreDir(s: SparkSession, dir: String): String =
     docStoreLock.synchronized {
       val sd = scratchDir("graft_docstore", dir)
-      if (graft.operators.DocStore.docStoreGen(s, sd) < 0L)
+      if (Stores.docstore.gen(s, sd) < 0L)
         graft.operators.DocStore.saveDocStoreCommitted(s, sd,
           t(s, dir, "documents"), numFiles = 8)
       sd
@@ -4930,7 +4930,7 @@ object SparkEntry {
       dir: String): (String, String) = suffixRebuildLock.synchronized {
     val dsDir = scratchDir("graft_sfx_corpus", dir)
     val sxDir = scratchDir("graft_sfx_rebuild", dir)
-    if (graft.operators.Suffix.dupIndexGen(s, sxDir) < 0L) {
+    if (Stores.suffix.gen(s, sxDir) < 0L) {
       val docs = t(s, dir, "documents")
       graft.operators.DocStore.saveDocStoreCommitted(s, dsDir,
         docs.filter(col("doc_id") % 10 =!= 0), numFiles = 8)
@@ -4955,7 +4955,7 @@ object SparkEntry {
   private def suffixStoreDir(s: SparkSession, dir: String): String =
     suffixStoreLock.synchronized {
       val sd = scratchDir("graft_suffix_store", dir)
-      if (graft.operators.Suffix.dupIndexGen(s, sd) < 0L)
+      if (Stores.suffix.gen(s, sd) < 0L)
         graft.operators.Suffix.saveDupIndexCommitted(s, sd,
           t(s, dir, "documents"), "doc_id", "text", numFiles = 8)
       sd
@@ -4993,10 +4993,10 @@ object SparkEntry {
   private def survTrimStoreDir(s: SparkSession, dir: String): String =
     survTrimStoreLock.synchronized {
       val sd = scratchDir("graft_survtrim_store", dir)
-      val stale = graft.operators.Suffix.survTrimGen(s, sd) >= 0L &&
+      val stale = Stores.survtrim.gen(s, sd) >= 0L &&
         !graft.operators.Suffix.survTrimParams(s, sd)
           .contains(survTrimParamsFp)
-      if (graft.operators.Suffix.survTrimGen(s, sd) < 0L || stale) {
+      if (Stores.survtrim.gen(s, sd) < 0L || stale) {
         val docs = t(s, dir, "documents")
           .withColumn("n_tokens",
             TextAnalysis.tokenCount(col("text")).cast("long"))

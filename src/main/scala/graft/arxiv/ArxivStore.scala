@@ -57,6 +57,18 @@ final case class ArxivStore(
     */
   def unpersist(): Unit = all.foreach(_.unpersist())
 
+  /** Release the cached tables that `successor` does not share — the
+    * rule for dropping a superseded snapshot. Spark keys caches by plan,
+    * so unpersisting a table the successor passed through unchanged
+    * would drop the successor's cache of it too. Safe only after the
+    * successor is materialized (see [[materialize]]).
+    */
+  def releaseFor(successor: ArxivStore): Unit = {
+    val kept = successor.all.map(_.queryExecution.analyzed)
+    all.filterNot(df => kept.exists(_.sameResult(df.queryExecution.analyzed)))
+      .foreach(_.unpersist())
+  }
+
   /** Durable lineage break: write every table to `dir` and re-read it.
     * The 100×-safe analog of the reference's "between-task state lives in
     * the database" (SURVEY §3 E1) — an executor loss after this point

@@ -108,7 +108,7 @@ object Enrich {
       val next = runOnce(spark, store, client, limitPerCategory, clock,
           exactCategoryMatch)
         .cached().materialize()
-      if (owned) store.unpersist() // superseded cycle snapshots don't accumulate
+      if (owned) store.releaseFor(next) // superseded cycle snapshots don't accumulate
       store = next
       owned = true
     }

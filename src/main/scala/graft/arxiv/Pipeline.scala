@@ -86,7 +86,7 @@ object Pipeline {
               finally pinned.unpersist() // store now reads parquet
             case None =>
               next.materialize()
-              if (ownedStore) before.unpersist() // bound cached-snapshot growth
+              if (ownedStore) before.releaseFor(next) // bound cached-snapshot growth
               store = next
               ownedStore = true
           }

@@ -456,19 +456,6 @@ object Dedup {
       "rows_per_band" -> index.rowsPerBand.toString))
   }
 
-  /** Delete documents from a stored band index — the LSM tombstone path
-    * (committed band/sets files never rewritten; applied physically by
-    * [[compactBandIndex]]). For a DEDUP gate this is load-bearing
-    * beyond storage hygiene: after a right-to-be-forgotten delete, a
-    * future near-duplicate of the deleted doc MUST be admitted — the
-    * tombstoned id can no longer produce candidate pairs, so it can't
-    * block an ingest. ONE append write of bare ids; idempotent; absent
-    * ids tombstone harmlessly.
-    */
-  def deleteFromBandIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String, ids: DataFrame, idCol: String): Unit =
-    Stores.band.delete(spark, dir, ids, idCol)
-
   /** Assemble a [[BandIndex]] under a per-sub reader (raw or
     * snapshot); with tombstones present BOTH relations anti-join the
     * ledger lazily, a store that never saw a delete keeps its exact
@@ -595,7 +582,7 @@ object Dedup {
     * writer (foreachBatch): `batchId` rides the manifest commit as a
     * ledger header; a re-delivered id writes nothing and returns None
     * ([[StoreFiles.commitAppendIdempotent]] — the ledger survives
-    * [[compactBandL0]]'s re-base).
+    * [[StoreFamily.compactL0]]'s re-base).
     */
   def appendBandIndexCommittedIdempotent(
       spark: org.apache.spark.sql.SparkSession, dir: String,
@@ -604,53 +591,6 @@ object Dedup {
     Stores.band.appendCommittedIdempotent(spark, dir, batchId) {
       appendBandIndex(spark, dir, batch, idCol, textCol)
     }
-
-  /** Latest committed generation (-1 if never committed). */
-  def bandGen(spark: org.apache.spark.sql.SparkSession, dir: String): Long =
-    Stores.band.gen(spark, dir)
-
-  /** Size-tiered L0 compaction for the band store (the
-    * [[Retrieval.compactPostingsL0]] move on this family): merge the
-    * appended manifest generations into one fresh run per sub — bands
-    * re-bucketed into per-band files, sets coalesced — re-basing the
-    * manifest WITHOUT rewriting the generation-0 base. Returns false
-    * below `minRuns`; tombstone ledger survives (deleted docs may live
-    * in the untouched base — [[compactBandIndex]] is the full rewrite
-    * that clears it).
-    */
-  def compactBandL0(spark: org.apache.spark.sql.SparkSession, dir: String,
-      minRuns: Int = 4): Boolean =
-    StoreFiles.compactL0(spark, dir, Seq("bands", "sets"), minRuns,
-        Stores.band.statCols) {
-      case ("bands", l0) =>
-        // CLUSTERED re-base: range-partitioning on (band, id) keeps the
-        // compacted run's per-file id envelopes disjoint — a plain
-        // hash repartition would give every file the whole id domain
-        // and the zone maps would stop pruning exactly as stores age
-        l0.repartitionByRange(
-            StoreFiles.rebaseParts(l0),
-            col("band"), col("id")).write.mode("append")
-          .partitionBy("band").parquet(s"$dir/bands")
-      case ("sets", l0) =>
-        l0.coalesce(1).write.mode("append").parquet(s"$dir/sets")
-      case (sub, _) =>
-        throw new IllegalStateException(s"unexpected band sub $sub")
-    }
-
-  /** Background-maintenance step for the band store (the
-    * [[Retrieval.maintainPostingsL0]] hook on this family — the
-    * [[CompactionPolicy]] machinery is family-agnostic; wiring a
-    * family is these three lines): compact L0 iff the policy fires.
-    */
-  def maintainBandL0(spark: org.apache.spark.sql.SparkSession, dir: String,
-      policy: CompactionPolicy): Boolean =
-    policy.triggered(Stores.band.l0Stats(spark, dir)) &&
-      compactBandL0(spark, dir, minRuns = 1)
-
-  /** Delete data files no committed snapshot references. */
-  def vacuumBandIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Seq[String] =
-    Stores.band.vacuum(spark, dir)
 
   /** Load exactly the COMMITTED file set (optionally as of a
     * generation); tombstones apply as in [[loadBandIndex]] — the delete
@@ -893,15 +833,6 @@ object Dedup {
     Stores.bloom.appendCommitted(spark, dir, expectedGen) {
       appendBloomIndex(spark, dir, batch, keyCol)
     }
-
-  /** Latest committed generation (-1 if never committed). */
-  def bloomGen(spark: org.apache.spark.sql.SparkSession, dir: String): Long =
-    Stores.bloom.gen(spark, dir)
-
-  /** Delete data files no committed snapshot references. */
-  def vacuumBloomIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Seq[String] =
-    Stores.bloom.vacuum(spark, dir)
 
   /** Load exactly the COMMITTED word rows (optionally as of a
     * generation), re-ORed at read like [[loadBloomIndex]]. Making a
@@ -1470,15 +1401,6 @@ object Dedup {
       Seq("max_hamming" -> index.maxHamming.toString))
   }
 
-  /** Delete documents from a stored SimHash index — same tombstone
-    * contract as [[deleteFromBandIndex]], and the same dedup-gate
-    * consequence: a tombstoned id stops producing candidate pairs, so
-    * it can no longer block a future ingest of similar content.
-    */
-  def deleteFromSimHashIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String, ids: DataFrame, idCol: String): Unit =
-    Stores.simhash.delete(spark, dir, ids, idCol)
-
   /** Assemble a [[SimHashIndex]] under a per-sub reader (raw or
     * snapshot); the ledger anti-joins lazily.
     */
@@ -1543,46 +1465,6 @@ object Dedup {
     Stores.simhash.appendCommitted(spark, dir, expectedGen) {
       appendSimHashIndex(spark, dir, batch, idCol, textCol)
     }
-
-  /** Latest committed generation (-1 if never committed). */
-  def simHashGen(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Long =
-    Stores.simhash.gen(spark, dir)
-
-  /** Size-tiered L0 compaction for the SimHash store (see
-    * [[StoreFiles.compactL0]]): merge the appended runs into one fresh
-    * per-band-bucketed run, re-basing the manifest WITHOUT rewriting
-    * the generation-0 base. Returns false below `minRuns`; the
-    * tombstone ledger survives ([[compactSimHashIndex]] is the full
-    * rewrite that clears it).
-    */
-  def compactSimHashL0(spark: org.apache.spark.sql.SparkSession,
-      dir: String, minRuns: Int = 4): Boolean =
-    StoreFiles.compactL0(spark, dir, Seq("banded"), minRuns,
-        Stores.simhash.statCols) {
-      case ("banded", l0) =>
-        // clustered re-base — see compactBandL0: disjoint id envelopes
-        l0.repartitionByRange(
-            StoreFiles.rebaseParts(l0),
-            col("band"), col("id")).write.mode("append")
-          .partitionBy("band").parquet(s"$dir/banded")
-      case (sub, _) =>
-        throw new IllegalStateException(s"unexpected simhash sub $sub")
-    }
-
-  /** Background-maintenance step for the SimHash store: compact L0 iff
-    * the [[CompactionPolicy]] fires (minRuns=1 — the policy IS the
-    * trigger). Call unconditionally after every committed append.
-    */
-  def maintainSimHashL0(spark: org.apache.spark.sql.SparkSession,
-      dir: String, policy: CompactionPolicy): Boolean =
-    policy.triggered(Stores.simhash.l0Stats(spark, dir)) &&
-      compactSimHashL0(spark, dir, minRuns = 1)
-
-  /** Delete data files no committed snapshot references. */
-  def vacuumSimHashIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Seq[String] =
-    Stores.simhash.vacuum(spark, dir)
 
   /** Load exactly the COMMITTED file set (optionally as of a
     * generation); tombstones stay retroactive ([[loadBandIndexSnapshot]]
@@ -1653,31 +1535,6 @@ object Dedup {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], remapSchema)
       .write.mode("overwrite").parquet(s"$dir/remap")
   }
-
-  /** Delete documents from the label store — tombstoned ids disappear
-    * from every [[resolveLabels]] view (one append write of bare ids;
-    * committed label/remap files untouched; applied physically by
-    * [[compactLabelStore]]). Two DOCUMENTED semantic bounds, both the
-    * standard LSM-store trade:
-    *
-    *   - components never RE-SPLIT: if the deleted doc was the bridge
-    *     between two sub-clusters, the survivors keep one component —
-    *     decremental connectivity needs the edge set, which this store
-    *     deliberately does not keep (an offline rebuild from the band
-    *     index recovers exact splits);
-    *   - a deleted id may persist as a LABEL value (labels are
-    *     canonical min-member ids, kept as opaque surrogates — the
-    *     deleted doc's CONTENT is gone from every relation; only its
-    *     numeric id may still name the cluster it once anchored).
-    *
-    * Pair-source contract: edges fed to a later [[appendLabels]] must
-    * come from a probe structure that saw the SAME delete (the band
-    * index's [[deleteFromBandIndex]]) — an edge naming a deleted id
-    * would link the batch to that id's old component label.
-    */
-  def deleteFromLabelStore(spark: org.apache.spark.sql.SparkSession,
-      dir: String, ids: DataFrame, idCol: String): Unit =
-    Stores.label.delete(spark, dir, ids, idCol)
 
   /** Current (id, component) view: stored labels with remap chains
     * followed to fixpoint. Each pass rewrites every label that still has
@@ -1879,44 +1736,6 @@ object Dedup {
       } finally { resolved.unpersist(); () }
     }
 
-  /** Latest committed generation (-1 if never committed). */
-  def labelGen(spark: org.apache.spark.sql.SparkSession, dir: String): Long =
-    Stores.label.gen(spark, dir)
-
-  /** Delete data files no committed snapshot references. */
-  def vacuumLabelStore(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Seq[String] =
-    Stores.label.vacuum(spark, dir)
-
-  /** Size-tiered L0 compaction for the label store (see
-    * [[StoreFiles.compactL0]]): merge the appended label/remap runs
-    * into one fresh file each, re-basing the manifest WITHOUT touching
-    * the generation-0 base. PURELY physical — remap rows are an
-    * order-free edge set resolved to fixpoint at read time
-    * ([[resolveLabelChains]]), so coalescing runs changes no view;
-    * chain SHORTENING is [[compactLabelStore]]'s job (the full
-    * rewrite, which also clears the ledger). Returns false below
-    * `minRuns`.
-    */
-  def compactLabelL0(spark: org.apache.spark.sql.SparkSession,
-      dir: String, minRuns: Int = 4): Boolean =
-    StoreFiles.compactL0(spark, dir, Seq("labels", "remap"), minRuns,
-        Stores.label.statCols) {
-      case (sub @ ("labels" | "remap"), l0) =>
-        l0.coalesce(1).write.mode("append").parquet(s"$dir/$sub")
-      case (sub, _) =>
-        throw new IllegalStateException(s"unexpected label sub $sub")
-    }
-
-  /** Background-maintenance step for the label store: compact L0 iff
-    * the [[CompactionPolicy]] fires (minRuns=1 — the policy IS the
-    * trigger). Call unconditionally after every committed append.
-    */
-  def maintainLabelL0(spark: org.apache.spark.sql.SparkSession,
-      dir: String, policy: CompactionPolicy): Boolean =
-    policy.triggered(Stores.label.l0Stats(spark, dir)) &&
-      compactLabelL0(spark, dir, minRuns = 1)
-
   /** [[resolveLabels]] over exactly the COMMITTED file set (optionally
     * as of a generation — the cluster state as it stood after that
     * commit). The remap side may have no committed files (a store that
@@ -2064,7 +1883,7 @@ object Dedup {
     * writer (foreachBatch): `batchId` rides the manifest commit as a
     * ledger header; a re-delivered id writes nothing and returns None
     * ([[StoreFiles.commitAppendIdempotent]] — the ledger survives
-    * [[compactWinnowL0]]'s re-base).
+    * [[StoreFamily.compactL0]]'s re-base).
     */
   def appendWinnowIndexCommittedIdempotent(
       spark: org.apache.spark.sql.SparkSession, dir: String,
@@ -2073,19 +1892,6 @@ object Dedup {
     Stores.winnow.appendCommittedIdempotent(spark, dir, batchId) {
       appendWinnowIndex(spark, dir, batch, idCol, textCol)
     }
-
-  /** Latest committed generation (-1 if never committed). */
-  def winnowGen(spark: org.apache.spark.sql.SparkSession, dir: String): Long =
-    Stores.winnow.gen(spark, dir)
-
-  /** Tombstone-delete documents — same re-admission semantics as
-    * [[deleteFromBandIndex]]: a forgotten doc's fingerprints can no
-    * longer produce candidate pairs, so its future near-duplicates
-    * are admitted.
-    */
-  def deleteFromWinnowIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String, ids: DataFrame, idCol: String): Unit =
-    Stores.winnow.delete(spark, dir, ids, idCol)
 
   /** Assemble a [[WinnowIndex]] under a per-sub reader (raw or
     * snapshot); the ledger anti-joins lazily.
@@ -2111,11 +1917,6 @@ object Dedup {
       dir: String, asOf: Option[Long] = None): WinnowIndex =
     mkWinnowIndex(spark, dir, Stores.winnow.snapshot(spark, dir, asOf))
 
-  /** Delete data files no committed snapshot references. */
-  def vacuumWinnowIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Seq[String] =
-    Stores.winnow.vacuum(spark, dir)
-
   /** Nightly compaction: rewrite `fps` into `nFiles` files with
     * tombstones applied physically; a manifested store compacts its
     * COMMITTED snapshot and history collapses to a fresh generation 0
@@ -2135,32 +1936,6 @@ object Dedup {
          }))
     } { (_, src, tmp) => src.coalesce(nFiles).write.parquet(tmp) }
   }
-
-  /** Size-tiered L0 compaction for the winnow store (see
-    * [[StoreFiles.compactL0]]): merge the appended fingerprint runs
-    * into one fresh file, re-basing the manifest WITHOUT touching the
-    * generation-0 base. Returns false below `minRuns`; the tombstone
-    * ledger survives ([[compactWinnowIndex]] is the full rewrite that
-    * clears it).
-    */
-  def compactWinnowL0(spark: org.apache.spark.sql.SparkSession,
-      dir: String, minRuns: Int = 4): Boolean =
-    StoreFiles.compactL0(spark, dir, Seq("fps"), minRuns,
-        Stores.winnow.statCols) {
-      case ("fps", l0) =>
-        l0.coalesce(1).write.mode("append").parquet(s"$dir/fps")
-      case (sub, _) =>
-        throw new IllegalStateException(s"unexpected winnow sub $sub")
-    }
-
-  /** Background-maintenance step for the winnow store: compact L0 iff
-    * the [[CompactionPolicy]] fires (minRuns=1 — the policy IS the
-    * trigger). Call unconditionally after every committed append.
-    */
-  def maintainWinnowL0(spark: org.apache.spark.sql.SparkSession,
-      dir: String, policy: CompactionPolicy): Boolean =
-    policy.triggered(Stores.winnow.l0Stats(spark, dir)) &&
-      compactWinnowL0(spark, dir, minRuns = 1)
 
   /** Probe a batch against the stored sketch: partial-overlap
     * candidate pairs (id_a = index doc, id_b = batch doc, n_shared =

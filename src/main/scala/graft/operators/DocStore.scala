@@ -72,32 +72,6 @@ object DocStore {
         .write.mode("append").parquet(s"$dir/docs")
     }
 
-  /** Size-tiered L0 compaction for the docstore: merge the appended
-    * manifest generations into one fresh CLUSTERED run —
-    * `repartitionByRange` on (source, doc_id) with an explicit count,
-    * so the compacted files regain the disjoint string+long zone-map
-    * envelopes the ingest stream's per-batch files lose — re-basing
-    * the manifest without rewriting the generation-0 base. Ledger and
-    * batch-id headers survive ([[StoreFiles.compactL0]] carries them).
-    */
-  def compactDocL0(spark: SparkSession, dir: String,
-      minRuns: Int = 4): Boolean =
-    StoreFiles.compactL0(spark, dir, Seq("docs"), minRuns,
-        Stores.docstore.statCols) {
-      case ("docs", l0) =>
-        l0.repartitionByRange(StoreFiles.rebaseParts(l0),
-            col("source"), col("doc_id"))
-          .write.mode("append").parquet(s"$dir/docs")
-      case (sub, _) =>
-        throw new IllegalStateException(s"unexpected docstore sub $sub")
-    }
-
-  /** Background-maintenance hook: compact L0 iff the policy fires. */
-  def maintainDocL0(spark: SparkSession, dir: String,
-      policy: CompactionPolicy): Boolean =
-    policy.triggered(Stores.docstore.l0Stats(spark, dir)) &&
-      compactDocL0(spark, dir, minRuns = 1)
-
   /** The committed snapshot (optionally as of a generation), with the
     * tombstone ledger folded out.
     */
@@ -124,16 +98,4 @@ object DocStore {
     Stores.docstore.dropDeleted(spark, dir,
       Stores.docstore.snapshotSkipping(spark, dir, "doc_id",
         lo, hi)("docs"))
-
-  /** Tombstone-delete by doc_id (lazy: serves anti-join the ledger). */
-  def deleteDocs(spark: SparkSession, dir: String, ids: DataFrame): Unit =
-    Stores.docstore.delete(spark, dir, ids, "doc_id")
-
-  /** Latest committed generation (-1 if never committed). */
-  def docStoreGen(spark: SparkSession, dir: String): Long =
-    Stores.docstore.gen(spark, dir)
-
-  /** Delete data files no committed snapshot references. */
-  def vacuumDocStore(spark: SparkSession, dir: String): Seq[String] =
-    Stores.docstore.vacuum(spark, dir)
 }

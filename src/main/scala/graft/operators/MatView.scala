@@ -75,7 +75,7 @@ object MatView {
       "keys" -> st.keys.mkString(","), "value_col" -> st.valueCol))
   }
 
-  private def readParams(spark: SparkSession,
+  private[operators] def readParams(spark: SparkSession,
       dir: String): (Seq[String], String) = {
     val p = StoreFiles.readParams(spark, dir)
     (p("keys").split(",").toIndexedSeq, p("value_col"))
@@ -119,14 +119,21 @@ object MatView {
     * structurally safe.
     */
   def serveAgg(st: AggState): DataFrame =
-    st.state.groupBy(st.keys.map(col): _*)
+    mergeDeltas(st.state, st.keys)
+      .filter(col("cnt") > 0)
+      .withColumn("avg_micro",
+        expr("(sum_v * 1000000L) div cnt"))
+
+  /** The associative merge of delta rows: one row per key. The merged
+    * partials are themselves valid delta rows.
+    */
+  private[operators] def mergeDeltas(state: DataFrame,
+      keys: Seq[String]): DataFrame =
+    state.groupBy(keys.map(col): _*)
       .agg(sum(col("cnt")).as("cnt"),
         sum(col("sum_v")).as("sum_v"),
         min(col("min_v")).as("min_v"),
         max(col("max_v")).as("max_v"))
-      .filter(col("cnt") > 0)
-      .withColumn("avg_micro",
-        expr("(sum_v * 1000000L) div cnt"))
 
   /** RETRACT deleted rows from the stored aggregate — the delete path
     * of the mergeable-aggregate family, as RETRACTION rows (the classic
@@ -219,13 +226,7 @@ object MatView {
            StoreFiles.snapshotRead(spark, dir, "state").localCheckpoint()
          else spark.read.parquet(s"$dir/state")))
     } { (_, src, tmp) =>
-      val (keys, _) = readParams(spark, dir)
-      src.groupBy(keys.map(col): _*)
-        .agg(sum(col("cnt")).as("cnt"),
-          sum(col("sum_v")).as("sum_v"),
-          min(col("min_v")).as("min_v"),
-          max(col("max_v")).as("max_v"))
-        .write.parquet(tmp)
+      mergeDeltas(src, readParams(spark, dir)._1).write.parquet(tmp)
     }
 
   // --- snapshot-manifest commit log for the aggregate-state family
@@ -262,45 +263,6 @@ object MatView {
     Stores.agg.appendCommittedIdempotent(spark, dir, batchId) {
       appendAggState(spark, dir, batch)
     }
-
-  /** Size-tiered L0 compaction for the aggregate store (see
-    * [[StoreFiles.compactL0]]): the appended delta runs collapse to at
-    * most one row per key (the same associative merge [[serveAgg]]
-    * applies — fully-retracted keys keep their cnt=0 row, exactly as
-    * the uncollapsed pile would merge) in one fresh run, re-basing the
-    * manifest WITHOUT rewriting the generation-0 base.
-    * [[compactAggState]] remains the full rewrite.
-    */
-  def compactAggL0(spark: SparkSession, dir: String,
-      minRuns: Int = 4): Boolean =
-    StoreFiles.compactL0(spark, dir, Seq("state"), minRuns,
-        Stores.agg.statCols) {
-      case ("state", l0) =>
-        val (keys, _) = readParams(spark, dir)
-        l0.groupBy(keys.map(col): _*)
-          .agg(sum(col("cnt")).as("cnt"), sum(col("sum_v")).as("sum_v"),
-            min(col("min_v")).as("min_v"), max(col("max_v")).as("max_v"))
-          .write.mode("append").parquet(s"$dir/state")
-      case (sub, _) =>
-        throw new IllegalStateException(s"unexpected agg sub $sub")
-    }
-
-  /** Background-maintenance step for the aggregate store: compact L0
-    * iff the [[CompactionPolicy]] fires (minRuns=1 — the policy IS the
-    * trigger). Call unconditionally after every committed append.
-    */
-  def maintainAggL0(spark: SparkSession, dir: String,
-      policy: CompactionPolicy): Boolean =
-    policy.triggered(Stores.agg.l0Stats(spark, dir)) &&
-      compactAggL0(spark, dir, minRuns = 1)
-
-  /** Latest committed generation (-1 if never committed). */
-  def aggGen(spark: SparkSession, dir: String): Long =
-    Stores.agg.gen(spark, dir)
-
-  /** Delete data files no committed snapshot references. */
-  def vacuumAggState(spark: SparkSession, dir: String): Seq[String] =
-    Stores.agg.vacuum(spark, dir)
 
   /** Load exactly the COMMITTED delta rows (optionally as of a
     * generation — the aggregate as it stood after that commit; the

@@ -251,8 +251,8 @@ object Retrieval {
     * the batch's files. A crash before the manifest write leaves the
     * data files invisible to every [[loadPostingsIndexSnapshot]] reader
     * (re-run the append; the orphaned files are dead weight until
-    * [[vacuumPostingsIndex]] or the next compaction). With
-    * `expectedGen` set (from [[postingsGen]]) the commit is OPTIMISTIC:
+    * `Stores.postings.vacuum` or the next compaction). With
+    * `expectedGen` set (from `Stores.postings.gen`) the commit is OPTIMISTIC:
     * it refuses if another writer committed in between, leaving this
     * batch's files as reclaimable orphans — redo the append against the
     * new snapshot. Returns the committed generation.
@@ -268,7 +268,7 @@ object Retrieval {
     * replayable writer (foreachBatch): `batchId` rides the manifest
     * commit as a ledger header; a re-delivered id writes nothing and
     * returns None ([[StoreFiles.commitAppendIdempotent]] — the ledger
-    * survives [[compactPostingsL0]]'s re-base).
+    * survives [[StoreFamily.compactL0]]'s re-base).
     */
   def appendPostingsIndexCommittedIdempotent(spark: SparkSession,
       dir: String, batch: DataFrame, idCol: String, textCol: String,
@@ -276,66 +276,6 @@ object Retrieval {
     Stores.postings.appendCommittedIdempotent(spark, dir, batchId) {
       appendPostingsIndex(spark, dir, batch, idCol, textCol)
     }
-
-  /** Latest committed generation of a stored index (-1 if it was never
-    * committed) — what an optimistic writer reads before its append.
-    */
-  def postingsGen(spark: SparkSession, dir: String): Long =
-    Stores.postings.gen(spark, dir)
-
-  /** Delete data files no committed snapshot references — torn appends
-    * and lost optimistic commits. Serve results are unchanged (no
-    * snapshot ever saw the orphans); a RAW [[loadPostingsIndex]]
-    * converges to the committed state. Returns the deleted paths.
-    */
-  def vacuumPostingsIndex(spark: SparkSession, dir: String): Seq[String] =
-    Stores.postings.vacuum(spark, dir)
-
-  /** Size-tiered L0 compaction for the postings store (see
-    * [[StoreFiles.compactL0]]): merge the appended runs into one fresh
-    * run per sub — postings re-bucketed into per-bucket files, the
-    * per-append stats DELTA rows summed into one delta row (total stats
-    * stay base + Σ deltas) — re-basing the manifest WITHOUT rewriting
-    * the generation-0 base. Returns false below `minRuns` appended
-    * generations. Serve ≡ before compaction (spec-pinned); the
-    * tombstone ledger survives (deleted docs may live in the untouched
-    * base — [[compactPostingsIndex]] is the full rewrite that clears it).
-    */
-  def compactPostingsL0(spark: SparkSession, dir: String,
-      minRuns: Int = 4): Boolean =
-    StoreFiles.compactL0(spark, dir, Seq("postings", "stats"), minRuns,
-        Stores.postings.statCols) {
-      case ("postings", l0) =>
-        // clustered re-base: range-partitioning on (bucket, doc_id)
-        // keeps the compacted run's per-file doc_id envelopes disjoint,
-        // so ranged serves keep skipping after the store ages (a hash
-        // repartition widens every file's envelope to the full domain)
-        l0.repartitionByRange(
-            StoreFiles.rebaseParts(l0),
-            col("bucket"), col("doc_id"))
-          .write.mode("append")
-          .partitionBy("bucket").parquet(s"$dir/postings")
-      case ("stats", l0) =>
-        l0.agg(sum(col("n")).as("n"), sum(col("t")).as("t"))
-          .coalesce(1).write.mode("append").parquet(s"$dir/stats")
-      case (sub, _) =>
-        throw new IllegalStateException(s"unexpected postings sub $sub")
-    }
-
-  /** Background-maintenance step for the postings store: measure L0
-    * ([[StoreFamily.l0Stats]] — driver FS calls, no job), ask the
-    * [[CompactionPolicy]], and run [[compactPostingsL0]] iff it
-    * triggered (minRuns=1: the POLICY is the trigger; the compaction's
-    * own count check must not second-guess it). Ingest loops call this
-    * unconditionally after every committed append — the store then
-    * self-regulates its read amplification (run count) and
-    * fragmentation (L0 bytes) with cost proportional to the ingest,
-    * never the corpus. Returns whether a compaction ran.
-    */
-  def maintainPostingsL0(spark: SparkSession, dir: String,
-      policy: CompactionPolicy): Boolean =
-    policy.triggered(Stores.postings.l0Stats(spark, dir)) &&
-      compactPostingsL0(spark, dir, minRuns = 1)
 
   /** Load exactly the COMMITTED file set — the union of every manifest
     * row — so a concurrent or torn append is never visible. With
@@ -1161,16 +1101,6 @@ object Retrieval {
         positionalDelta(spark, dir, batch, idCol, textCol), "bucket")
       .write.mode("append").partitionBy("bucket").parquet(s"$dir/postings")
 
-  /** Delete documents — the LSM tombstone path, in its simplest form:
-    * phrase matching has no corpus-total term (unlike BM25's (N, T)),
-    * so the delete is ONE append of bare doc_id tombstone rows and the
-    * serve-side adjustment is just the anti join. Idempotent; absent
-    * ids tombstone harmlessly.
-    */
-  def deleteFromPositionalIndex(spark: SparkSession, dir: String,
-      ids: DataFrame, idCol: String): Unit =
-    Stores.positional.delete(spark, dir, ids, idCol)
-
   /** Load; with tombstones present the postings anti-join them lazily
     * (bucket partition pruning still reaches the scan below the join);
     * a store that never saw a delete keeps its exact pre-tombstone
@@ -1228,46 +1158,6 @@ object Retrieval {
     Stores.positional.appendCommitted(spark, dir, expectedGen) {
       appendPositionalIndex(spark, dir, batch, idCol, textCol)
     }
-
-  /** Latest committed generation (-1 if never committed). */
-  def positionalGen(spark: SparkSession, dir: String): Long =
-    Stores.positional.gen(spark, dir)
-
-  /** Delete data files no committed snapshot references. */
-  def vacuumPositionalIndex(spark: SparkSession, dir: String): Seq[String] =
-    Stores.positional.vacuum(spark, dir)
-
-  /** Size-tiered L0 compaction for the positional store (see
-    * [[StoreFiles.compactL0]]): merge the appended positional runs into
-    * one fresh per-bucket run, re-basing the manifest WITHOUT rewriting
-    * the generation-0 base. Returns false below `minRuns`; the
-    * tombstone ledger survives ([[compactPositionalIndex]] is the full
-    * rewrite that clears it).
-    */
-  def compactPositionalL0(spark: SparkSession, dir: String,
-      minRuns: Int = 4): Boolean =
-    StoreFiles.compactL0(spark, dir, Seq("postings"), minRuns,
-        Stores.positional.statCols) {
-      case ("postings", l0) =>
-        // clustered re-base — see compactPostingsL0: disjoint doc_id
-        // envelopes per compacted file
-        l0.repartitionByRange(
-            StoreFiles.rebaseParts(l0),
-            col("bucket"), col("doc_id"))
-          .write.mode("append")
-          .partitionBy("bucket").parquet(s"$dir/postings")
-      case (sub, _) =>
-        throw new IllegalStateException(s"unexpected positional sub $sub")
-    }
-
-  /** Background-maintenance step for the positional store: compact L0
-    * iff the [[CompactionPolicy]] fires (minRuns=1 — the policy IS the
-    * trigger). Call unconditionally after every committed append.
-    */
-  def maintainPositionalL0(spark: SparkSession, dir: String,
-      policy: CompactionPolicy): Boolean =
-    policy.triggered(Stores.positional.l0Stats(spark, dir)) &&
-      compactPositionalL0(spark, dir, minRuns = 1)
 
   /** Load exactly the COMMITTED file set (optionally as of a generation
     * — TIME TRAVEL to the phrase index as it stood after that commit).

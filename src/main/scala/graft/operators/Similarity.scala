@@ -637,15 +637,6 @@ object Similarity {
       .partitionBy("cell").parquet(s"$dir/assignments")
   }
 
-  /** Delete vectors from a stored IVF index — the PQ tombstone contract
-    * ([[deleteFromPqIndex]]) on the assignments table: one append of
-    * bare neighbor_ids, idempotent, applied physically by
-    * [[compactIvfIndex]].
-    */
-  def deleteFromIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String, ids: DataFrame, idCol: String): Unit =
-    Stores.ivf.delete(spark, dir, ids, idCol)
-
   /** Assemble an [[IvfIndex]] under a per-sub reader (raw or
     * snapshot); the ledger anti-joins lazily.
     */
@@ -729,7 +720,7 @@ object Similarity {
     * writer (foreachBatch): `batchId` rides the manifest commit as a
     * ledger header; a re-delivered id writes nothing and returns None
     * ([[StoreFiles.commitAppendIdempotent]] — the ledger survives
-    * [[compactIvfL0]]'s re-base).
+    * [[StoreFamily.compactL0]]'s re-base).
     */
   def appendIvfIndexCommittedIdempotent(
       spark: org.apache.spark.sql.SparkSession, dir: String,
@@ -738,49 +729,6 @@ object Similarity {
     Stores.ivf.appendCommittedIdempotent(spark, dir, batchId) {
       appendIvfIndex(spark, dir, batch, idCol, vecCol)
     }
-
-  /** Latest committed generation (-1 if never committed). */
-  def ivfGen(spark: org.apache.spark.sql.SparkSession, dir: String): Long =
-    Stores.ivf.gen(spark, dir)
-
-  /** Delete data files no committed snapshot references. */
-  def vacuumIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Seq[String] =
-    Stores.ivf.vacuum(spark, dir)
-
-  /** Size-tiered L0 compaction for the IVF store (see
-    * [[StoreFiles.compactL0]]): merge the appended assignment runs into
-    * one fresh per-cell-bucketed run, re-basing the manifest WITHOUT
-    * rewriting the generation-0 base. Returns false below `minRuns`;
-    * the tombstone ledger survives ([[compactIvfIndex]] is the full
-    * rewrite that clears it).
-    */
-  def compactIvfL0(spark: org.apache.spark.sql.SparkSession, dir: String,
-      minRuns: Int = 4): Boolean =
-    StoreFiles.compactL0(spark, dir, Seq("assignments"), minRuns,
-        Stores.ivf.statCols) {
-      case ("assignments", l0) =>
-        // clustered re-base: range-partitioning on (cell, neighbor_id)
-        // keeps the compacted run's per-file id envelopes disjoint, so
-        // zone-map skipping survives store aging (a hash repartition
-        // would spread every id range across every file)
-        l0.repartitionByRange(
-            StoreFiles.rebaseParts(l0),
-            col("cell"), col("neighbor_id"))
-          .write.mode("append")
-          .partitionBy("cell").parquet(s"$dir/assignments")
-      case (sub, _) =>
-        throw new IllegalStateException(s"unexpected ivf sub $sub")
-    }
-
-  /** Background-maintenance step for the IVF store: compact L0 iff the
-    * [[CompactionPolicy]] fires (minRuns=1 — the policy IS the
-    * trigger). Call unconditionally after every committed append.
-    */
-  def maintainIvfL0(spark: org.apache.spark.sql.SparkSession, dir: String,
-      policy: CompactionPolicy): Boolean =
-    policy.triggered(Stores.ivf.l0Stats(spark, dir)) &&
-      compactIvfL0(spark, dir, minRuns = 1)
 
   /** Load exactly the COMMITTED assignments (optionally as of a
     * generation); tombstones stay retroactive. The cell partition
@@ -1132,16 +1080,6 @@ object Similarity {
     PqIndex(centroids, books, coded)
   }
 
-  private def vecTableSchema(first: String): org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField(first,
-        org.apache.spark.sql.types.IntegerType, nullable = false),
-      org.apache.spark.sql.types.StructField("sub",
-        org.apache.spark.sql.types.IntegerType, nullable = false),
-      org.apache.spark.sql.types.StructField("centroid",
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.LongType), nullable = false)))
-
   /** Persist: coarse centroids and codebooks as two tiny parquet params
     * tables, codes PARTITIONED BY cell (a probe reads nprobe/nlist of
     * the files). The codebooks row is (code, sub, centroid); the
@@ -1174,17 +1112,6 @@ object Similarity {
       .map(_._2.sortBy(_._1).map(_._3).toArray)
     (cents, books)
   }
-
-  /** Delete vectors from a stored PQ index — the LSM tombstone path
-    * (committed code files are never rewritten). ONE append write of
-    * tombstoned neighbor_ids; no stats to adjust (ADC scoring has no
-    * corpus-total term), so unlike the postings delete this touches
-    * nothing else. Idempotent (already-tombstoned ids are dropped by
-    * [[StoreFiles.appendTombstones]]); absent ids tombstone harmlessly.
-    */
-  def deleteFromPqIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String, ids: DataFrame, idCol: String): Unit =
-    Stores.pq.delete(spark, dir, ids, idCol)
 
   /** Load a stored index. With tombstones present the codes relation
     * anti-joins them lazily (cell partition pruning still reaches the
@@ -1414,7 +1341,7 @@ object Similarity {
     }
 
   /** [[appendPqIndex]] with the commit point (and, with `expectedGen`
-    * from [[pqGen]], optimistic concurrency — a stale expectation
+    * from `Stores.pq.gen`, optimistic concurrency — a stale expectation
     * refuses and leaves the batch's files as vacuum-reclaimable
     * orphans). Returns the committed generation.
     */
@@ -1429,7 +1356,7 @@ object Similarity {
     * writer (foreachBatch): `batchId` rides the manifest commit as a
     * ledger header; a re-delivered id writes nothing and returns None
     * ([[StoreFiles.commitAppendIdempotent]] — the ledger survives
-    * [[compactPqL0]]'s re-base).
+    * [[StoreFamily.compactL0]]'s re-base).
     */
   def appendPqIndexCommittedIdempotent(
       spark: org.apache.spark.sql.SparkSession, dir: String,
@@ -1438,48 +1365,6 @@ object Similarity {
     Stores.pq.appendCommittedIdempotent(spark, dir, batchId) {
       appendPqIndex(spark, dir, batch, idCol, vecCol)
     }
-
-  /** Latest committed generation (-1 if never committed). */
-  def pqGen(spark: org.apache.spark.sql.SparkSession, dir: String): Long =
-    Stores.pq.gen(spark, dir)
-
-  /** Physically delete unmanifested codes files (torn appends, lost
-    * optimistic commits). Returns the deleted paths.
-    */
-  def vacuumPqIndex(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Seq[String] =
-    Stores.pq.vacuum(spark, dir)
-
-  /** Size-tiered L0 compaction for the PQ store (see
-    * [[StoreFiles.compactL0]]): merge the appended code runs into one
-    * fresh per-cell-bucketed run, re-basing the manifest WITHOUT
-    * rewriting the generation-0 base. Returns false below `minRuns`;
-    * the tombstone ledger survives ([[compactPqIndex]] is the full
-    * rewrite that clears it).
-    */
-  def compactPqL0(spark: org.apache.spark.sql.SparkSession, dir: String,
-      minRuns: Int = 4): Boolean =
-    StoreFiles.compactL0(spark, dir, Seq("codes"), minRuns,
-        Stores.pq.statCols) {
-      case ("codes", l0) =>
-        // clustered re-base — see compactIvfL0: disjoint id envelopes
-        l0.repartitionByRange(
-            StoreFiles.rebaseParts(l0),
-            col("cell"), col("neighbor_id"))
-          .write.mode("append")
-          .partitionBy("cell").parquet(s"$dir/codes")
-      case (sub, _) =>
-        throw new IllegalStateException(s"unexpected pq sub $sub")
-    }
-
-  /** Background-maintenance step for the PQ store: compact L0 iff the
-    * [[CompactionPolicy]] fires (minRuns=1 — the policy IS the
-    * trigger). Call unconditionally after every committed append.
-    */
-  def maintainPqL0(spark: org.apache.spark.sql.SparkSession, dir: String,
-      policy: CompactionPolicy): Boolean =
-    policy.triggered(Stores.pq.l0Stats(spark, dir)) &&
-      compactPqL0(spark, dir, minRuns = 1)
 
   /** Load exactly the committed codes file set — torn appends invisible;
     * with `asOf`, time travel to that generation. basePath keeps the

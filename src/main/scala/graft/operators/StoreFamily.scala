@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col}
+import org.apache.spark.sql.functions.{broadcast, col, sum}
 
 /** Typed descriptor of one persisted store family — the paths, delete
   * ledger key, and commit-log wiring that used to be ten hand-cloned
@@ -26,16 +26,26 @@ import org.apache.spark.sql.functions.{broadcast, col}
   * build/append-delta/load-assembly/merge-law code — not a
   * re-implementation of any of this.
   *
+  * `l0` registers how [[compactL0]] re-bases each sub's appended runs
+  * ([[L0Layout]]); a family without it (bloom, the build-once suffix
+  * stores) has no L0 compaction. A non-empty layout map must name
+  * exactly `subs`.
+  *
   * What stays with the family, deliberately: what an append computes
   * (the delta under the stored params), how a load assembles its
-  * typed index, merge laws (bit_or, stats deltas, remap chains), and
-  * per-sub compaction layouts. Those are semantics; this is plumbing.
+  * typed index, and its full-rewrite compaction layout. Those are
+  * semantics; this is plumbing.
   */
 final case class StoreFamily(
     name: String,
     subs: Seq[String],
     ledger: Option[String] = None,
-    statCols: Map[String, Seq[String]] = Map.empty) {
+    statCols: Map[String, Seq[String]] = Map.empty,
+    l0: Map[String, L0Layout] = Map.empty) {
+  require(l0.isEmpty || l0.keySet == subs.toSet,
+    s"store family '$name': L0 layouts for " +
+      s"[${l0.keys.toSeq.sorted.mkString(", ")}] must match its subs " +
+      s"[${subs.mkString(", ")}]")
 
   def dataDirs(dir: String): Seq[String] = subs.map(s => s"$dir/$s")
   private def ledgerDir(dir: String) = s"$dir/tombstones"
@@ -180,6 +190,44 @@ final case class StoreFamily(
     L0Stats(l0.size, bytes)
   }
 
+  /** Size-tiered L0 compaction ([[StoreFiles.compactL0]]): merge the
+    * appended manifest generations into one fresh run per sub under its
+    * registered [[L0Layout]], re-basing the manifest WITHOUT rewriting
+    * the generation-0 base. Returns false below `minRuns` appended
+    * generations. The tombstone ledger survives (deleted docs may live
+    * in the untouched base — the family's full-rewrite compaction
+    * clears it), and so do batch-id headers.
+    */
+  def compactL0(spark: SparkSession, dir: String, minRuns: Int = 4): Boolean = {
+    require(l0.nonEmpty, s"store family '$name' registers no L0 layout")
+    StoreFiles.compactL0(spark, dir, subs, minRuns, statCols) { (sub, runs) =>
+      val out = s"$dir/$sub"
+      l0(sub) match {
+        case L0Layout.Coalesce =>
+          runs.coalesce(1).write.mode("append").parquet(out)
+        case L0Layout.Clustered(key, id, partitioned) =>
+          val w = runs.repartitionByRange(StoreFiles.rebaseParts(runs),
+            col(key), col(id)).write.mode("append")
+          (if (partitioned) w.partitionBy(key) else w).parquet(out)
+        case L0Layout.Merge(law) =>
+          law(spark, dir, runs).write.mode("append").parquet(out)
+      }
+    }
+  }
+
+  /** Background-maintenance step: measure L0 ([[l0Stats]] — file-system
+    * calls, no job), ask the [[CompactionPolicy]], and run [[compactL0]]
+    * iff it triggered (minRuns=1: the POLICY is the trigger; the
+    * compaction's own count check must not second-guess it). Ingest
+    * loops call this unconditionally after every committed append, so
+    * the store self-regulates its read amplification (run count) and
+    * fragmentation (L0 bytes) at a cost proportional to the ingest,
+    * never the corpus. Returns whether a compaction ran.
+    */
+  def maintain(spark: SparkSession, dir: String,
+      policy: CompactionPolicy): Boolean =
+    policy.triggered(l0Stats(spark, dir)) && compactL0(spark, dir, minRuns = 1)
+
   /** The full-compaction scaffold: checkpoint the ledger, pick the
     * source state — the COMMITTED snapshot when manifested (a torn
     * append's orphans must be dropped by the rewrite, never
@@ -206,6 +254,30 @@ final case class StoreFamily(
   }
 }
 
+/** How [[StoreFamily.compactL0]] re-bases one sub's appended L0 runs
+  * into a single fresh run.
+  */
+sealed trait L0Layout
+object L0Layout {
+  /** One file: the rows are order-free, so merging runs is purely
+    * physical.
+    */
+  case object Coalesce extends L0Layout
+  /** CLUSTERED re-base: range-partition on (`key`, `id`) with an
+    * explicit count ([[StoreFiles.rebaseParts]]), so the compacted
+    * run's per-file `id` envelopes stay disjoint and zone-map skipping
+    * survives store aging (a hash repartition would give every file the
+    * whole id domain). `partitioned` writes `partitionBy(key)`.
+    */
+  final case class Clustered(key: String, id: String,
+      partitioned: Boolean = true) extends L0Layout
+  /** A merge law: `law(spark, dir, runs)` folds the runs into fewer
+    * rows under the family's algebra, written as it comes.
+    */
+  final case class Merge(law: (SparkSession, String, DataFrame) => DataFrame)
+      extends L0Layout
+}
+
 /** One committed store's L0 measurement: appended runs and their
   * total bytes (base excluded — see [[StoreFamily.l0Stats]]).
   */
@@ -224,9 +296,9 @@ final case class L0Stats(runs: Int, bytes: Long)
   *     while the store fragments — bytes catches the hot-ingest case
   *     the count trigger exists to protect).
   *
-  * A policy never fires on an empty L0 (nothing to merge), so
-  * ingest loops call `maintain*` unconditionally after each commit
-  * and the store self-regulates: cost stays proportional to the
+  * A policy never fires on an empty L0 (nothing to merge), so ingest
+  * loops call [[StoreFamily.maintain]] unconditionally after each
+  * commit and the store self-regulates: cost stays proportional to the
   * ingest rate, never the corpus (the compaction itself is
   * [[StoreFiles.compactL0]] — base files untouched).
   */
@@ -248,9 +320,17 @@ final case class CompactionPolicy(
   * fold, compaction scaffold) comes from the descriptor.
   */
 object Stores {
-  /** MinHash LSH band index ([[Dedup.BandIndex]]). */
+  import L0Layout.{Clustered, Coalesce, Merge}
+
+  /** MinHash LSH band index ([[Dedup.BandIndex]]). Deleting an id is
+    * load-bearing for a DEDUP gate beyond storage hygiene: after a
+    * right-to-be-forgotten delete, a future near-duplicate of the
+    * deleted doc MUST be admitted — the tombstoned id can no longer
+    * produce candidate pairs, so it cannot block an ingest. The same
+    * re-admission holds for [[simhash]] and [[winnow]]. */
   val band = StoreFamily("band", Seq("bands", "sets"), Some("id"),
-    statCols = Map("bands" -> Seq("id"), "sets" -> Seq("id")))
+    statCols = Map("bands" -> Seq("id"), "sets" -> Seq("id")),
+    l0 = Map("bands" -> Clustered("band", "id"), "sets" -> Coalesce))
   /** Bloom membership filter ([[Dedup.BloomIndex]]) — no ledger:
     * deletes are the documented stale-keys trade (extra candidates
     * only, scrubbed by the exact confirm). No zone maps: word_idx is
@@ -258,35 +338,74 @@ object Stores {
   val bloom = StoreFamily("bloom", Seq("words"))
   /** SimHash banded fingerprint index ([[Dedup.SimHashIndex]]). */
   val simhash = StoreFamily("simhash", Seq("banded"), Some("id"),
-    statCols = Map("banded" -> Seq("id")))
-  /** Connected-components label store (labels + merge remaps). */
+    statCols = Map("banded" -> Seq("id")),
+    l0 = Map("banded" -> Clustered("band", "id")))
+  /** Connected-components label store (labels + merge remaps).
+    *
+    * L0 compaction is PURELY physical: remap rows are an order-free
+    * edge set resolved to fixpoint at read time
+    * ([[Dedup.resolveLabelChains]]), so coalescing runs changes no
+    * view; chain SHORTENING is [[Dedup.compactLabelStore]]'s job.
+    *
+    * A delete tombstones ids, which drop from every served view, with
+    * two deliberate approximations: a component a deleted id bridged
+    * stays merged (decremental connectivity needs the edge set, which
+    * this store does not keep — an offline rebuild from the band index
+    * recovers exact splits), and a deleted id may persist as a LABEL
+    * value (labels are opaque canonical min-member ids; the deleted
+    * doc's content is gone from every relation). Pair-source contract:
+    * edges fed to a later [[Dedup.appendLabels]] must come from a probe
+    * structure that saw the SAME delete (the [[band]] index), or an
+    * edge naming a deleted id would link the batch to that id's old
+    * component label. */
   val label = StoreFamily("label", Seq("labels", "remap"), Some("id"),
-    statCols = Map("labels" -> Seq("id")))
+    statCols = Map("labels" -> Seq("id")),
+    l0 = Map("labels" -> Coalesce, "remap" -> Coalesce))
   /** Winnowing fingerprint index ([[Dedup.WinnowIndex]]). */
   val winnow = StoreFamily("winnow", Seq("fps"), Some("id"),
-    statCols = Map("fps" -> Seq("id")))
+    statCols = Map("fps" -> Seq("id")),
+    l0 = Map("fps" -> Coalesce))
   /** IVF coarse-quantized ANN index ([[Similarity.IvfIndex]]);
     * centroids are save-time-immutable and live outside the log. */
   val ivf = StoreFamily("ivf", Seq("assignments"), Some("neighbor_id"),
-    statCols = Map("assignments" -> Seq("neighbor_id")))
+    statCols = Map("assignments" -> Seq("neighbor_id")),
+    l0 = Map("assignments" -> Clustered("cell", "neighbor_id")))
   /** IVF-PQ coded ANN index ([[Similarity.PqIndex]]); centroids and
-    * codebooks live outside the log. */
+    * codebooks live outside the log. A delete is bare neighbor_ids:
+    * ADC scoring has no corpus-total term, so unlike the [[postings]]
+    * delete there are no stats to adjust. */
   val pq = StoreFamily("pq", Seq("codes"), Some("neighbor_id"),
-    statCols = Map("codes" -> Seq("neighbor_id")))
+    statCols = Map("codes" -> Seq("neighbor_id")),
+    l0 = Map("codes" -> Clustered("cell", "neighbor_id")))
   /** BM25 postings index ([[Retrieval.PostingsIndex]]) — the ledger
     * carries (doc_id, dl) so serve-side stats adjust without a scan;
-    * its delete function stays with the family. */
+    * its delete function stays with the family. L0 compaction sums
+    * the per-append stats DELTA rows into one delta row (total stats
+    * stay base + the deltas). */
   val postings = StoreFamily("postings", Seq("postings", "stats"),
     Some("doc_id"),
-    statCols = Map("postings" -> Seq("doc_id")))
-  /** Positional phrase index ([[Retrieval.PositionalIndex]]). */
+    statCols = Map("postings" -> Seq("doc_id")),
+    l0 = Map("postings" -> Clustered("bucket", "doc_id"),
+      "stats" -> Merge((_, _, runs) =>
+        runs.agg(sum(col("n")).as("n"), sum(col("t")).as("t")).coalesce(1))))
+  /** Positional phrase index ([[Retrieval.PositionalIndex]]). Phrase
+    * matching has no corpus-total term (unlike BM25's (N, T)), so a
+    * delete is bare doc_ids and the serve-side adjustment is just the
+    * anti join. */
   val positional = StoreFamily("positional", Seq("postings"),
     Some("doc_id"),
-    statCols = Map("postings" -> Seq("doc_id")))
+    statCols = Map("postings" -> Seq("doc_id")),
+    l0 = Map("postings" -> Clustered("bucket", "doc_id")))
   /** Mergeable aggregate state ([[MatView.AggState]]) — no ledger:
     * deletes are explicit retraction delta rows. No zone maps: state
-    * keys are group values, not range-predicated ids. */
-  val agg = StoreFamily("agg", Seq("state"))
+    * keys are group values, not range-predicated ids. L0 compaction
+    * collapses the delta runs to at most one row per key under the
+    * associative merge [[MatView.serveAgg]] applies (fully-retracted
+    * keys keep their cnt=0 row, exactly as the uncollapsed pile would
+    * merge). */
+  val agg = StoreFamily("agg", Seq("state"),
+    l0 = Map("state" -> Merge((spark, dir, runs) =>
+      MatView.mergeDeltas(runs, MatView.readParams(spark, dir)._1))))
   /** Exact-duplication suffix index ([[Suffix.DupIndex]]) — the
     * per-token (dup_len, prev_len) relation plus per-doc token counts.
     * Build-once/rebuild (no ledger, no incremental append: a new
@@ -300,9 +419,13 @@ object Stores {
     * the corpus itself under the manifest lifecycle, clustered on
     * (source, doc_id) at save so BOTH the string `source` envelope and
     * the integral `doc_id` envelope prune files at plan time (a
-    * source- or id-ranged read never lists the rest of the corpus). */
+    * source- or id-ranged read never lists the rest of the corpus).
+    * L0 compaction re-clusters the same way, so the compacted files
+    * regain the disjoint envelopes the ingest stream's per-batch files
+    * lose. */
   val docstore = StoreFamily("docstore", Seq("docs"), Some("doc_id"),
-    statCols = Map("docs" -> Seq("doc_id", "source")))
+    statCols = Map("docs" -> Seq("doc_id", "source")),
+    l0 = Map("docs" -> Clustered("source", "doc_id", partitioned = false)))
   /** SURVIVOR-TRIM store ([[Suffix.saveSurvTrimCommitted]]) — the
     * curation capstone's exact-trim stage made build-once: the DEDUP
     * STAGE'S OUTPUT (the keep-best survivor corpus) committed next to

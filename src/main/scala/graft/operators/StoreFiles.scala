@@ -400,11 +400,6 @@ private[graft] object StoreFiles {
     }
   }
 
-  def parquetStringStats(conf: org.apache.hadoop.conf.Configuration,
-      file: String, cols: Seq[String]): Seq[(String, Array[Byte], Array[Byte])] =
-    if (cols.isEmpty) Seq.empty
-    else stringStatsOfBlocks(footerBlocks(conf, file), cols)
-
   /** `stat=<col>|<min>|<max>|<path>` header lines for the files whose
     * store subdirectory has registered stat columns (path goes LAST —
     * it is the one field that may contain arbitrary characters).

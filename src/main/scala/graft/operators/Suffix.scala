@@ -415,14 +415,6 @@ object Suffix {
     DupIndex(read("duplens"), read("doclens"))
   }
 
-  /** Latest committed generation (-1 if never committed). */
-  def dupIndexGen(spark: SparkSession, dir: String): Long =
-    Stores.suffix.gen(spark, dir)
-
-  /** Delete data files no committed snapshot references. */
-  def vacuumDupIndex(spark: SparkSession, dir: String): Seq[String] =
-    Stores.suffix.vacuum(spark, dir)
-
   /** Build and COMMIT the SURVIVOR-TRIM store (family #13): the DEDUP
     * STAGE'S OUTPUT — `surv`, the keep-best survivor corpus with
     * `idCol`, `textCol`, and any metadata columns riding along — next
@@ -498,14 +490,6 @@ object Suffix {
   def survTrimParams(spark: SparkSession, dir: String): Option[String] =
     StoreFiles.manifestHeaders(spark, dir)
       .collectFirst { case ("survparams", v) => v }
-
-  /** Latest committed generation (-1 if never committed). */
-  def survTrimGen(spark: SparkSession, dir: String): Long =
-    Stores.survtrim.gen(spark, dir)
-
-  /** Delete data files no committed snapshot references. */
-  def vacuumSurvTrim(spark: SparkSession, dir: String): Seq[String] =
-    Stores.survtrim.vacuum(spark, dir)
 
   /** [[maximalDupSpans]] served from a built index: filter + island
     * merge only — no suffix jobs.

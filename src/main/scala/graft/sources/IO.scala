@@ -15,12 +15,6 @@ import org.apache.spark.sql.types.StructType
   */
 object IO {
 
-  /** S1: JSON array file with an explicit schema (inference is fragile on
-    * null-heavy fields — SURVEY §1.3).
-    */
-  def readJsonArray(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read.schema(schema).option("multiLine", true).json(path)
-
   def readParquet(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 

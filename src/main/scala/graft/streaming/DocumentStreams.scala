@@ -113,39 +113,15 @@ object DocumentStreams {
       .parquet(outDir)
   }
 
-  /** Probe a STORED MinHash band index with every micro-batch of a
-    * document stream, appending the cross near-dup pairs to `outPath` —
-    * the nightly-ingest fuzzy dedup run continuously. Each drop's batch
-    * is handed to the UNCHANGED batch operator
-    * ([[graft.operators.Dedup.minHashLshProbe]]) through foreachBatch,
-    * so stream and batch results agree by construction (the probe is
-    * per-document independent: probing drops one at a time unions to
-    * probing them together). The full minhash pipeline chains several
-    * aggregations, which Spark's continuous-stateful planner would
-    * reject — foreachBatch is the supported (and production) shape for
-    * reusing a multi-stage batch operator per trigger.
-    *
-    * Within-stream pairs deliberately never form here (the probe is
-    * new × corpus only); in production the accepted drop's bands are
-    * appended to the stored index between triggers, which makes later
-    * drops dedup against earlier ones — the composition
-    * [[graft.operators.Dedup.saveBandIndex]] already supports.
-    *
-    * Exactly-once output: foreachBatch is at-least-once (a batch whose
-    * write committed but whose checkpoint didn't is RE-EXECUTED on
-    * restart), so each batch OVERWRITES its own `batch_id=N` partition
-    * of `outPath` — a replay rewrites the same files instead of
-    * appending duplicates. Readers see `batch_id` as a partition column.
-    */
-  /** Exact-membership ingest run continuously — the MEMBERSHIP twin of
-    * [[probeBandIndex]] for the Bloom family: each micro-batch
-    * fingerprints its documents, keeps the first row per fingerprint
-    * within the drop, admits only fingerprints NOT already in the corpus
-    * (the STORED Bloom filter gates; the exact confirm scrubs its false
-    * positives), lands the admitted rows in their own `batch_id=N`
-    * partition of `outPath`, and absorbs the admitted keys into the
-    * stored filter — so LATER drops dedup against EARLIER ones without
-    * the corpus ever being re-hashed or shuffled.
+  /** Exact-membership ingest run continuously, for the Bloom family:
+    * each micro-batch fingerprints its documents, keeps the first row
+    * per fingerprint within the drop, admits only fingerprints NOT
+    * already in the corpus (the STORED Bloom filter gates; the exact
+    * confirm scrubs its false positives), lands the admitted rows in
+    * their own `batch_id=N` partition of `outPath`, and absorbs the
+    * admitted keys into the stored filter — so LATER drops dedup
+    * against EARLIER ones without the corpus ever being re-hashed or
+    * shuffled.
     *
     * The exact-confirm relation at each trigger is `corpus` ∪ the rows
     * this query already admitted (read back from the sink), which keeps
@@ -321,7 +297,7 @@ object DocumentStreams {
   def bandIngestCommittedBatch(spark: SparkSession, idxDir: String,
       policy: graft.operators.CompactionPolicy)(
       batch: DataFrame, batchId: Long): Unit = {
-    import graft.operators.{Dedup, StoreFiles}
+    import graft.operators.{Dedup, StoreFiles, Stores}
     // early ledger probe saves the replay even the gating jobs; the
     // authoritative check stays inside the idempotent append
     if (!StoreFiles.committedBatchIds(spark, idxDir).contains(batchId)) {
@@ -342,7 +318,7 @@ object DocumentStreams {
     }
     // unconditional — including on replays, covering the crash window
     // between a batch's commit and its compaction
-    Dedup.maintainBandL0(spark, idxDir, policy)
+    Stores.band.maintain(spark, idxDir, policy)
     ()
   }
 
@@ -375,7 +351,7 @@ object DocumentStreams {
   def winnowIngestCommittedBatch(spark: SparkSession, idxDir: String,
       policy: graft.operators.CompactionPolicy)(
       batch: DataFrame, batchId: Long): Unit = {
-    import graft.operators.{Dedup, StoreFiles}
+    import graft.operators.{Dedup, StoreFiles, Stores}
     // early ledger probe saves the replay even the gating jobs; the
     // authoritative check stays inside the idempotent append
     if (!StoreFiles.committedBatchIds(spark, idxDir).contains(batchId)) {
@@ -393,7 +369,7 @@ object DocumentStreams {
     }
     // unconditional — including on replays, covering the crash window
     // between a batch's commit and its compaction
-    Dedup.maintainWinnowL0(spark, idxDir, policy)
+    Stores.winnow.maintain(spark, idxDir, policy)
     ()
   }
 
@@ -424,10 +400,10 @@ object DocumentStreams {
   def postingsIngestCommittedBatch(spark: SparkSession, idxDir: String,
       policy: graft.operators.CompactionPolicy)(
       batch: DataFrame, batchId: Long): Unit = {
-    import graft.operators.Retrieval
+    import graft.operators.{Retrieval, Stores}
     Retrieval.appendPostingsIndexCommittedIdempotent(spark, idxDir,
       batch, "doc_id", "text", batchId)
-    Retrieval.maintainPostingsL0(spark, idxDir, policy)
+    Stores.postings.maintain(spark, idxDir, policy)
     ()
   }
 
@@ -463,10 +439,10 @@ object DocumentStreams {
   def docIngestCommittedBatch(spark: SparkSession, storeDir: String,
       policy: graft.operators.CompactionPolicy)(
       batch: DataFrame, batchId: Long): Unit = {
-    import graft.operators.DocStore
+    import graft.operators.{DocStore, Stores}
     DocStore.appendDocStoreCommittedIdempotent(spark, storeDir, batch,
       batchId)
-    DocStore.maintainDocL0(spark, storeDir, policy)
+    Stores.docstore.maintain(spark, storeDir, policy)
     ()
   }
 
@@ -870,7 +846,7 @@ object DocumentStreams {
     graft.operators.Similarity.appendIvfIndexCommittedIdempotent(spark,
       idxDir, batch.select(col("vec_id"), col("embedding")),
       "vec_id", "embedding", batchId)
-    graft.operators.Similarity.maintainIvfL0(spark, idxDir, policy)
+    graft.operators.Stores.ivf.maintain(spark, idxDir, policy)
     ()
   }
 
@@ -908,7 +884,7 @@ object DocumentStreams {
       idxDir: String, evalSet: DataFrame, tau: Double,
       policy: graft.operators.CompactionPolicy)(
       batch: DataFrame, batchId: Long): Unit = {
-    import graft.operators.{Similarity, StoreFiles}
+    import graft.operators.{Similarity, StoreFiles, Stores}
     if (!StoreFiles.committedBatchIds(spark, idxDir).contains(batchId)) {
       val flagged = Similarity.semanticContamination(batch, evalSet,
           "vec_id", "embedding", tau)
@@ -922,7 +898,7 @@ object DocumentStreams {
     }
     // unconditional — including on replays, covering the crash window
     // between a batch's commit and its compaction
-    Similarity.maintainIvfL0(spark, idxDir, policy)
+    Stores.ivf.maintain(spark, idxDir, policy)
     ()
   }
 
@@ -951,7 +927,7 @@ object DocumentStreams {
     graft.operators.Similarity.appendPqIndexCommittedIdempotent(spark,
       idxDir, batch.select(col("vec_id"), col("embedding")),
       "vec_id", "embedding", batchId)
-    graft.operators.Similarity.maintainPqL0(spark, idxDir, policy)
+    graft.operators.Stores.pq.maintain(spark, idxDir, policy)
     ()
   }
 
@@ -1025,7 +1001,7 @@ object DocumentStreams {
     graft.operators.MatView.appendAggStateCommittedIdempotent(spark, mvDir,
       batch.withColumn("tok", size(split(col("text"), " ")).cast("long")),
       batchId)
-    graft.operators.MatView.maintainAggL0(spark, mvDir, policy)
+    graft.operators.Stores.agg.maintain(spark, mvDir, policy)
     ()
   }
 
@@ -1045,7 +1021,7 @@ object DocumentStreams {
   // long-lived sinks: every trigger writes its own `batch_id=N`
   // partition, so a long-running ingest accumulates one L0 partition
   // per batch without bound (the streaming analog of the small-file
-  // problem the compact* ops fix for batch appends). absorb*Deltas
+  // problem the compact* ops fix for batch appends). An absorb
   // reads the committed sink partitions, appends their rows to the
   // stored structure through the SAME write path as the batch append
   // (new files, partitioned identically), then deletes the sink and
@@ -1082,47 +1058,6 @@ object DocumentStreams {
     if (sParts.nonEmpty)
       spark.read.parquet(sParts: _*)
         .write.mode("append").parquet(s"$idxDir/stats")
-    deleteDirs(spark, outPath, checkpointDir)
-  }
-
-  /** Promote an aggregate stream's committed deltas into the stored
-    * state ([[aggIngest]]'s sink → q143's store).
-    */
-  def absorbAggDeltas(spark: SparkSession, mvDir: String,
-      outPath: String, checkpointDir: String): Unit = {
-    val parts = committedParts(spark, outPath, -1L)
-    if (parts.nonEmpty)
-      spark.read.parquet(parts: _*)
-        .write.mode("append").parquet(s"$mvDir/state")
-    deleteDirs(spark, outPath, checkpointDir)
-  }
-
-  /** Promote a PQ stream's committed code deltas into the stored index
-    * ([[pqIngest]]'s sink → q119's store).
-    */
-  def absorbPqDeltas(spark: SparkSession, idxDir: String,
-      outPath: String, checkpointDir: String): Unit = {
-    val parts = committedParts(spark, outPath, -1L)
-    if (parts.nonEmpty)
-      graft.operators.StoreFiles.clusterForWrite(
-          spark.read.parquet(parts: _*)
-            .select(col("neighbor_id"), col("cell"), col("codes")), "cell")
-        .write.mode("append").partitionBy("cell").parquet(s"$idxDir/codes")
-    deleteDirs(spark, outPath, checkpointDir)
-  }
-
-  /** Promote an IVF stream's committed assignment deltas into the
-    * stored index ([[ivfIngest]]'s sink → q106's store).
-    */
-  def absorbIvfDeltas(spark: SparkSession, idxDir: String,
-      outPath: String, checkpointDir: String): Unit = {
-    val parts = committedParts(spark, outPath, -1L)
-    if (parts.nonEmpty)
-      graft.operators.StoreFiles.clusterForWrite(
-          spark.read.parquet(parts: _*)
-            .select(col("neighbor_id"), col("cv"), col("cell")), "cell")
-        .write.mode("append").partitionBy("cell")
-        .parquet(s"$idxDir/assignments")
     deleteDirs(spark, outPath, checkpointDir)
   }
 
@@ -1377,17 +1312,4 @@ object DocumentStreams {
       readParts(spark,
         committedParts(spark, s"$outPath/remap", -1L), Dedup.remapSchema))
   }
-
-  def probeBandIndex(spark: SparkSession, landingDir: String,
-      index: graft.operators.Dedup.BandIndex, outPath: String,
-      checkpointDir: String,
-      maxFilesPerTrigger: Option[Int] = None): org.apache.spark.sql.streaming.StreamingQuery =
-    readDocuments(spark, landingDir, maxFilesPerTrigger)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.operators.Dedup.minHashLshProbe(index, batch, "doc_id", "text")
-          .write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
-      }
-      .option("checkpointLocation", checkpointDir)
-      .start()
 }

@@ -1,10 +1,10 @@
 package graft
 
-import graft.operators.{MatView, Retrieval, Similarity}
+import graft.operators.Retrieval
 import graft.streaming.DocumentStreams
 import org.apache.spark.sql.functions._
 
-/** L0 → base absorb for the stateless streaming twins: promoting the
+/** L0 → base absorb for the postings streaming twin: promoting the
   * sink's batch partitions into the stored structure must leave serving
   * bit-identical, empty the sink and checkpoint, and hand the next
   * streaming run a clean L0.
@@ -13,7 +13,6 @@ class AbsorbSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val docs = Tables(spark, sf, "documents")
-  private lazy val emb = Tables(spark, sf, "embeddings")
 
   private def tmp(tag: String): String = {
     val d = java.nio.file.Files.createTempDirectory(s"graft_absorb_$tag")
@@ -55,69 +54,5 @@ class AbsorbSpec extends SparkSpec {
         .select(($"doc_id" + 1000000L).as("doc_id"), $"text"), 0L)
     val extended = serve(DocumentStreams.livePostingsIndex(spark, idx, out))
     assert(extended != before, "new drop must change scores (N grew)")
-  }
-
-  test("agg: store-only serve after absorb ≡ live view; sink cleared") {
-    val base = tmp("agg")
-    val mv = s"$base/mv"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
-    val toks = docs.withColumn("tok", size(split($"text", " ")).cast("long"))
-    MatView.saveAggState(
-      MatView.buildAggState(toks.filter($"doc_id" % 3 === 0),
-        Seq("lang", "source"), "tok"), mv)
-    DocumentStreams.aggIngestBatch(spark, mv, out)(
-      docs.filter($"doc_id" % 3 === 1), 0L)
-    DocumentStreams.aggIngestBatch(spark, mv, out)(
-      docs.filter($"doc_id" % 3 === 2), 1L)
-    new java.io.File(ckpt).mkdirs()
-    def serve(st: MatView.AggState) = MatView.serveAgg(st)
-      .as[(String, String, Long, Long, Long, Long, Long)].collect().toSet
-    val before = serve(DocumentStreams.liveAggState(spark, mv, out))
-    DocumentStreams.absorbAggDeltas(spark, mv, out, ckpt)
-    assert(!exists(out) && !exists(ckpt))
-    assert(serve(MatView.loadAggState(spark, mv)) == before && before.nonEmpty)
-  }
-
-  test("pq: store-only serve after absorb ≡ live view; sink cleared") {
-    val base = tmp("pq")
-    val idx = s"$base/idx"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
-    Similarity.savePqIndex(
-      Similarity.buildPqIndex(emb.filter($"vec_id" % 3 === 0),
-        "vec_id", "embedding"), idx)
-    DocumentStreams.pqIngestBatch(spark, idx, out)(
-      emb.filter($"vec_id" % 3 === 1), 0L)
-    DocumentStreams.pqIngestBatch(spark, idx, out)(
-      emb.filter($"vec_id" % 3 === 2), 1L)
-    new java.io.File(ckpt).mkdirs()
-    val queries = emb.filter($"vec_id" % 10 === 5)
-    def serve(i: Similarity.PqIndex) =
-      Similarity.pqSearchIndex(queries, i, "vec_id", "embedding", k = 5)
-        .collect().map(_.toSeq).toSet
-    val before = serve(DocumentStreams.livePqIndex(spark, idx, out))
-    DocumentStreams.absorbPqDeltas(spark, idx, out, ckpt)
-    assert(!exists(out) && !exists(ckpt))
-    assert(serve(Similarity.loadPqIndex(spark, idx)) == before &&
-      before.nonEmpty)
-  }
-
-  test("ivf: store-only serve after absorb ≡ live view; sink cleared") {
-    val base = tmp("ivf")
-    val idx = s"$base/idx"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
-    Similarity.saveIvfIndex(
-      Similarity.buildIvfIndex(emb.filter($"vec_id" % 3 === 0),
-        "vec_id", "embedding"), idx)
-    DocumentStreams.ivfIngestBatch(spark, idx, out)(
-      emb.filter($"vec_id" % 3 === 1), 0L)
-    DocumentStreams.ivfIngestBatch(spark, idx, out)(
-      emb.filter($"vec_id" % 3 === 2), 1L)
-    new java.io.File(ckpt).mkdirs()
-    val queries = emb.filter($"vec_id" % 10 === 5)
-    def serve(i: Similarity.IvfIndex) =
-      Similarity.ivfSearchIndex(queries, i, "vec_id", "embedding", k = 5)
-        .collect().map(_.toSeq).toSet
-    val before = serve(DocumentStreams.liveIvfIndex(spark, idx, out))
-    DocumentStreams.absorbIvfDeltas(spark, idx, out, ckpt)
-    assert(!exists(out) && !exists(ckpt))
-    assert(serve(Similarity.loadIvfIndex(spark, idx)) == before &&
-      before.nonEmpty)
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import graft.arxiv._
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** End-to-end pipeline test over the reference's own 30-record fixture
   * (dataset.json, copied to test resources per FIXTURES.md §1), with the
@@ -55,6 +56,21 @@ class ArxivPipelineSpec extends SparkSpec {
     // UNIQUE title violated by neither ingest nor enrich upsert
     assert(result.validation.filter($"check_name" === "unique_title")
       .select($"violations").as[Long].head() == 0L)
+  }
+
+  test("every table but the audit log stays cached after the run") {
+    // a stage that passes a table through unchanged shares its cache
+    // entry with the snapshot it supersedes (Spark keys caches by plan);
+    // releasing that snapshot must not drop the shared entry
+    val tables = Seq("publications" -> store.publications,
+      "citations" -> store.citations, "authors" -> store.authors,
+      "publication_venues" -> store.publicationVenues,
+      "categories" -> store.categories, "authorship" -> store.authorship,
+      "publication_category" -> store.publicationCategory)
+    val uncached = tables.collect {
+      case (n, df) if df.storageLevel == StorageLevel.NONE => n
+    }
+    assert(uncached.isEmpty, s"uncached after Pipeline.run: $uncached")
   }
 
   test("enrich inserted or updated publications on title (merge semantics)") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Dedup, Retrieval, Similarity}
+import graft.operators.{Dedup, Retrieval, Similarity, Stores}
 import org.apache.spark.sql.functions._
 
 /** Small-file compaction for every append-only stored index family:
@@ -45,7 +45,7 @@ class CompactionSpec extends SparkSpec {
     assert(headerPaths("strstat").nonEmpty, "docstore commits must carry strstat")
     val served = DocStore.loadDocStoreSnapshot(spark, dir)
       .select($"doc_id").as[Long].collect().sorted.toSeq
-    assert(DocStore.compactDocL0(spark, dir, minRuns = 2))
+    assert(Stores.docstore.compactL0(spark, dir, minRuns = 2))
     val committed = StoreFiles.manifestPaths(spark, dir).toSet
     for (kind <- Seq("stat", "strstat")) {
       val orphans = headerPaths(kind) -- committed
@@ -181,7 +181,7 @@ class CompactionSpec extends SparkSpec {
       docs.filter($"doc_id" % 3 === 1), "doc_id", "text")
     Retrieval.appendPositionalIndex(spark, dir,
       docs.filter($"doc_id" % 3 === 2), "doc_id", "text")
-    Retrieval.deleteFromPositionalIndex(spark, dir,
+    Stores.positional.delete(spark, dir,
       docs.filter($"doc_id" % 7 === 3).select("doc_id"), "doc_id")
     val phrases = docs.filter($"doc_id" % 100 === 11 &&
         size(split($"text", " ")) >= 5)
@@ -228,9 +228,9 @@ class CompactionSpec extends SparkSpec {
       baseStamps.keySet.map("file:" + _)
     assert(l0Files.nonEmpty)
     // below the run-count trigger the policy REFUSES (no rewrite)
-    assert(!Retrieval.compactPostingsL0(spark, dir, minRuns = 4))
+    assert(!Stores.postings.compactL0(spark, dir, minRuns = 4))
     assert(StoreFiles.manifestGen(spark, dir) == 3L)
-    assert(Retrieval.compactPostingsL0(spark, dir, minRuns = 3))
+    assert(Stores.postings.compactL0(spark, dir, minRuns = 3))
     // manifest re-based to a fresh generation 0
     assert(StoreFiles.manifestGen(spark, dir) == 0L)
     val after = StoreFiles.manifestPaths(spark, dir).toSet
@@ -258,7 +258,7 @@ class CompactionSpec extends SparkSpec {
   test("CompactionPolicy: bytes trigger fires when the count trigger " +
       "would wait forever; empty L0 never fires; maintain loop " +
       "self-regulates with serve unchanged") {
-    import graft.operators.{CompactionPolicy, L0Stats, StoreFiles, Stores}
+    import graft.operators.{CompactionPolicy, L0Stats, StoreFiles}
     // decision table, no store needed
     val byCount = CompactionPolicy(maxRuns = 3)
     assert(!byCount.triggered(L0Stats(0, 0L)))
@@ -278,11 +278,11 @@ class CompactionSpec extends SparkSpec {
       Retrieval.appendPostingsIndexCommitted(spark, dir,
         docs.filter($"doc_id" % 9 === r), "doc_id", "text")
       assert(Stores.postings.l0Stats(spark, dir).runs == 1)
-      assert(Retrieval.maintainPostingsL0(spark, dir, byBytes))
+      assert(Stores.postings.maintain(spark, dir, byBytes))
       assert(StoreFiles.manifestGen(spark, dir) == 0L)
       assert(Stores.postings.l0Stats(spark, dir) == L0Stats(0, 0L))
       // quiescent store: the policy does not re-fire on empty L0
-      assert(!Retrieval.maintainPostingsL0(spark, dir, byBytes))
+      assert(!Stores.postings.maintain(spark, dir, byBytes))
     }
     // serve over the self-regulated store ≡ the same corpus indexed
     // in one shot
@@ -300,37 +300,6 @@ class CompactionSpec extends SparkSpec {
         "qid", "qterms", k = 5)
       .as[(Long, Long, Long, Int)].collect().toSet
     assert(served == oneShot && served.nonEmpty)
-  }
-
-  test("compactBandL0 + maintainBandL0: the policy machinery is " +
-      "family-agnostic — base untouched, probe identical, re-based " +
-      "store appendable") {
-    import graft.operators.{CompactionPolicy, StoreFiles}
-    val dir = tmpDir("band_l0")
-    Dedup.saveBandIndexCommitted(
-      Dedup.buildBandIndex(docs.filter($"doc_id" % 3 === 0),
-        "doc_id", "text"), dir)
-    val baseStamps = parquetStamps(s"$dir/bands", s"$dir/sets")
-    for (r <- Seq(1, 4, 7))
-      Dedup.appendBandIndexCommitted(spark, dir,
-        docs.filter($"doc_id" % 9 === r), "doc_id", "text")
-    def served = Dedup.minHashLshProbe(
-        Dedup.loadBandIndexSnapshot(spark, dir), shifted, "doc_id", "text")
-      .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
-    val before = served
-    // below the count trigger the policy refuses; at 3 runs it fires
-    assert(!Dedup.maintainBandL0(spark, dir, CompactionPolicy(maxRuns = 4)))
-    assert(StoreFiles.manifestGen(spark, dir) == 3L)
-    assert(Dedup.maintainBandL0(spark, dir, CompactionPolicy(maxRuns = 3)))
-    assert(StoreFiles.manifestGen(spark, dir) == 0L)
-    // generation-0 base files byte-identical (path + mtime)
-    val nowStamps = parquetStamps(s"$dir/bands", s"$dir/sets")
-    baseStamps.foreach { case (p, ts) =>
-      assert(nowStamps.get(p).contains(ts), s"base file rewritten: $p")
-    }
-    assert(served == before && before.nonEmpty)
-    assert(Dedup.appendBandIndexCommitted(spark, dir,
-      docs.filter($"doc_id" % 9 === 2), "doc_id", "text") == 1L)
   }
 
   /** The shared maintain-L0 contract, asserted per family: 3 committed
@@ -357,9 +326,42 @@ class CompactionSpec extends SparkSpec {
     assert(serve == before && before.nonEmpty)
   }
 
-  test("maintain*L0 sweep: winnow, simhash, ivf, pq, positional, label " +
-      "all honor the shared policy contract") {
-    import graft.operators.{Dedup, Retrieval, Similarity}
+  test("a StoreFamily whose L0 layouts do not name exactly its subs " +
+      "fails at construction") {
+    import graft.operators.{L0Layout, StoreFamily}
+    val e = intercept[IllegalArgumentException] {
+      StoreFamily("bad", Seq("a", "b"), l0 = Map("a" -> L0Layout.Coalesce))
+    }
+    assert(e.getMessage.contains("'bad'") &&
+      e.getMessage.contains("must match its subs [a, b]"))
+    // no layouts at all is legal: that family has no L0 compaction
+    val none = StoreFamily("none", Seq("a"))
+    assert(intercept[IllegalArgumentException](
+        none.compactL0(spark, tmpDir("none_l0")))
+      .getMessage.contains("registers no L0 layout"))
+  }
+
+  test("L0 maintain sweep: band, winnow, simhash, ivf, pq, postings, " +
+      "positional, label, agg, docstore all honor the shared policy " +
+      "contract") {
+    import graft.operators.{DocStore, MatView}
+    locally { // band
+      val dir = tmpDir("band_sweep_l0")
+      Dedup.saveBandIndexCommitted(
+        Dedup.buildBandIndex(docs.filter($"doc_id" % 3 === 0),
+          "doc_id", "text"), dir)
+      checkL0Maintain(Seq(s"$dir/bands", s"$dir/sets"),
+        r => { Dedup.appendBandIndexCommitted(spark, dir,
+          docs.filter($"doc_id" % 9 === 3 * r - 2), "doc_id", "text"); () },
+        Stores.band.maintain(spark, dir, _),
+        Stores.band.gen(spark, dir),
+        Dedup.minHashLshProbe(Dedup.loadBandIndexSnapshot(spark, dir),
+            shifted, "doc_id", "text")
+          .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet)
+      // the re-based store accepts the next committed append
+      assert(Dedup.appendBandIndexCommitted(spark, dir,
+        docs.filter($"doc_id" % 9 === 2), "doc_id", "text") == 1L)
+    }
     locally { // winnow
       val dir = tmpDir("winnow_l0")
       Dedup.saveWinnowIndexCommitted(
@@ -368,8 +370,8 @@ class CompactionSpec extends SparkSpec {
       checkL0Maintain(Seq(s"$dir/fps"),
         r => { Dedup.appendWinnowIndexCommitted(spark, dir,
           docs.filter($"doc_id" % 9 === 3 * r - 2), "doc_id", "text"); () },
-        Dedup.maintainWinnowL0(spark, dir, _),
-        Dedup.winnowGen(spark, dir),
+        Stores.winnow.maintain(spark, dir, _),
+        Stores.winnow.gen(spark, dir),
         Dedup.winnowProbe(Dedup.loadWinnowIndexSnapshot(spark, dir),
             shifted, "doc_id", "text", minShared = 1L)
           .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet)
@@ -382,8 +384,8 @@ class CompactionSpec extends SparkSpec {
       checkL0Maintain(Seq(s"$dir/banded"),
         r => { Dedup.appendSimHashIndexCommitted(spark, dir,
           docs.filter($"doc_id" % 9 === 3 * r - 2), "doc_id", "text"); () },
-        Dedup.maintainSimHashL0(spark, dir, _),
-        Dedup.simHashGen(spark, dir),
+        Stores.simhash.maintain(spark, dir, _),
+        Stores.simhash.gen(spark, dir),
         Dedup.simHashProbe(Dedup.loadSimHashIndexSnapshot(spark, dir),
             shifted, "doc_id", "text")
           .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet)
@@ -398,8 +400,8 @@ class CompactionSpec extends SparkSpec {
         r => { Similarity.appendIvfIndexCommitted(spark, dir,
           emb.filter($"vec_id" >= 40 * r && $"vec_id" < 40 * (r + 1)),
           "vec_id", "embedding"); () },
-        Similarity.maintainIvfL0(spark, dir, _),
-        Similarity.ivfGen(spark, dir),
+        Stores.ivf.maintain(spark, dir, _),
+        Stores.ivf.gen(spark, dir),
         Similarity.ivfSearchIndex(queries,
             Similarity.loadIvfIndexSnapshot(spark, dir),
             "vec_id", "embedding", k = 5)
@@ -416,13 +418,31 @@ class CompactionSpec extends SparkSpec {
         r => { Similarity.appendPqIndexCommitted(spark, dir,
           emb.filter($"vec_id" >= 40 * r && $"vec_id" < 40 * (r + 1)),
           "vec_id", "embedding"); () },
-        Similarity.maintainPqL0(spark, dir, _),
-        Similarity.pqGen(spark, dir),
+        Stores.pq.maintain(spark, dir, _),
+        Stores.pq.gen(spark, dir),
         Similarity.pqSearchIndex(queries,
             Similarity.loadPqIndexSnapshot(spark, dir),
             "vec_id", "embedding", k = 5)
           .select($"query_id", $"neighbor_id", $"rank")
           .as[(Long, Long, Int)].collect().toSet)
+    }
+    locally { // postings (stats runs fold under the sum law)
+      val dir = tmpDir("postings_sweep_l0")
+      val queries = docs.filter($"doc_id" % 50 === 7)
+        .select($"doc_id".as("qid"),
+          array_distinct(slice(split($"text", " "), 1, 4)).as("qterms"))
+      Retrieval.savePostingsIndexCommitted(
+        Retrieval.buildPostingsIndex(docs.filter($"doc_id" % 3 === 0),
+          "doc_id", "text"), dir)
+      checkL0Maintain(Seq(s"$dir/postings", s"$dir/stats"),
+        r => { Retrieval.appendPostingsIndexCommitted(spark, dir,
+          docs.filter($"doc_id" % 9 === 3 * r - 2), "doc_id", "text"); () },
+        Stores.postings.maintain(spark, dir, _),
+        Stores.postings.gen(spark, dir),
+        Retrieval.bm25SearchIndex(queries,
+            Retrieval.loadPostingsIndexSnapshot(spark, dir),
+            "qid", "qterms", k = 5)
+          .as[(Long, Long, Long, Int)].collect().toSet)
     }
     locally { // positional
       val dir = tmpDir("pos_l0")
@@ -435,8 +455,8 @@ class CompactionSpec extends SparkSpec {
       checkL0Maintain(Seq(s"$dir/postings"),
         r => { Retrieval.appendPositionalIndexCommitted(spark, dir,
           docs.filter($"doc_id" % 9 === 3 * r - 2), "doc_id", "text"); () },
-        Retrieval.maintainPositionalL0(spark, dir, _),
-        Retrieval.positionalGen(spark, dir),
+        Stores.positional.maintain(spark, dir, _),
+        Stores.positional.gen(spark, dir),
         Retrieval.phraseSearchIndex(phrases,
             Retrieval.loadPositionalIndexSnapshot(spark, dir),
             "pid", "pterms")
@@ -452,10 +472,36 @@ class CompactionSpec extends SparkSpec {
         r => { Dedup.appendLabelsCommitted(spark, dir,
           Seq(10L + r).toDF("id"), "id",
           Seq((10L + r, 1L)).toDF("id_a", "id_b")); () },
-        Dedup.maintainLabelL0(spark, dir, _),
-        Dedup.labelGen(spark, dir),
+        Stores.label.maintain(spark, dir, _),
+        Stores.label.gen(spark, dir),
         Dedup.resolveLabelsSnapshot(spark, dir)
           .select($"id", $"component").as[(Long, Long)].collect().toSet)
+    }
+    locally { // agg (delta runs fold under the keyed merge law)
+      val dir = tmpDir("agg_l0")
+      val toks = docs.withColumn("tok", size(split($"text", " ")).cast("long"))
+      MatView.saveAggStateCommitted(
+        MatView.buildAggState(toks.filter($"doc_id" % 3 === 0),
+          Seq("lang", "source"), "tok"), dir)
+      checkL0Maintain(Seq(s"$dir/state"),
+        r => { MatView.appendAggStateCommitted(spark, dir,
+          toks.filter($"doc_id" % 9 === 3 * r - 2)); () },
+        Stores.agg.maintain(spark, dir, _),
+        Stores.agg.gen(spark, dir),
+        MatView.serveAgg(MatView.loadAggStateSnapshot(spark, dir))
+          .collect().map(_.toSeq).toSet)
+    }
+    locally { // docstore (clustered without partitionBy)
+      val dir = tmpDir("doc_l0")
+      DocStore.saveDocStoreCommitted(spark, dir,
+        docs.filter($"doc_id" % 3 === 0), numFiles = 2)
+      checkL0Maintain(Seq(s"$dir/docs"),
+        r => { DocStore.appendDocStoreCommitted(spark, dir,
+          docs.filter($"doc_id" % 9 === 3 * r - 2)); () },
+        Stores.docstore.maintain(spark, dir, _),
+        Stores.docstore.gen(spark, dir),
+        DocStore.loadDocStoreSnapshot(spark, dir)
+          .collect().map(_.toSeq).toSet)
     }
   }
 }

@@ -59,41 +59,6 @@ class DocumentStreamsSpec extends SparkSpec {
       "replayed docs must be absorbed by the fingerprint dedup state")
   }
 
-  test("streaming band-index probe over drops equals the batch probe") {
-    import graft.operators.Dedup
-    val docs = Tables(spark, sf, "documents")
-    val corpus = docs.filter($"doc_id" % 10 =!= 0)
-    val batchSide = docs.filter($"doc_id" % 10 === 0)
-    // stored index over the corpus
-    val idxDir = java.nio.file.Files.createTempDirectory("band_idx_s").toString
-    Dedup.saveBandIndex(Dedup.buildBandIndex(corpus, "doc_id", "text"), idxDir)
-    val index = Dedup.loadBandIndex(spark, idxDir)
-    // land the new side as two separate drops
-    val landing = java.nio.file.Files.createTempDirectory("probe_landing")
-    for ((m, k) <- Seq(0, 1).zipWithIndex) {
-      val out = java.nio.file.Files.createTempDirectory(s"probe_chunk$k")
-      batchSide.filter($"doc_id" % 20 / 10 === m).coalesce(1)
-        .write.mode("overwrite").parquet(out.toString)
-      val part = java.nio.file.Files.list(out).toArray.map(_.toString)
-        .filter(p => p.endsWith(".parquet") && !p.contains("_SUCCESS")).head
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(part), landing.resolve(f"drop_$k%02d.parquet"))
-    }
-    val outPath = java.nio.file.Files.createTempDirectory("probe_out").toString + "/pairs"
-    val ckpt = java.nio.file.Files.createTempDirectory("probe_ckpt").toString
-    val q = DocumentStreams.probeBandIndex(spark, landing.toString, index,
-      outPath, ckpt, maxFilesPerTrigger = Some(1))
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.read.parquet(outPath)
-      .select($"id_a", $"id_b", $"jaccard") // batch_id partition col dropped
-      .as[(Long, Long, Double)].collect().toSet
-    val batch = Dedup.minHashLshProbe(index, batchSide, "doc_id", "text")
-      .as[(Long, Long, Double)].collect().toSet
-    assert(streamed == batch)
-    assert(streamed.nonEmpty, "the planted cross dups must surface")
-  }
-
   test("bloom ingest: later drops dedup against earlier; append is replay-idempotent") {
     import graft.operators.Dedup
     val fpCol = graft.functions.TextAnalysis.fingerprint(col("text"))

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Dedup, MatView, Retrieval, Similarity, StoreFiles}
+import graft.operators.{Dedup, MatView, Retrieval, Similarity, StoreFiles, Stores}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -40,7 +40,7 @@ class ManifestFamiliesSpec extends SparkSpec {
 
     Dedup.saveBandIndexCommitted(
       Dedup.buildBandIndex(corpus, "doc_id", "text"), dir)
-    assert(Dedup.bandGen(spark, dir) == 0L)
+    assert(Stores.band.gen(spark, dir) == 0L)
     assert(Dedup.appendBandIndexCommitted(spark, dir, b1, "doc_id", "text",
       expectedGen = Some(0L)) == 1L)
     Dedup.appendBandIndex(spark, dir, torn, "doc_id", "text") // torn
@@ -59,13 +59,13 @@ class ManifestFamiliesSpec extends SparkSpec {
         expectedGen = Some(0L))
     }
     // vacuum reclaims the torn + OCC-loser orphans; raw converges
-    assert(Dedup.vacuumBandIndex(spark, dir).nonEmpty)
-    assert(Dedup.vacuumBandIndex(spark, dir).isEmpty)
+    assert(Stores.band.vacuum(spark, dir).nonEmpty)
+    assert(Stores.band.vacuum(spark, dir).isEmpty)
     assert(pairs(Dedup.loadBandIndex(spark, dir)) ==
       Set((1L, 11L), (5L, 12L)))
     // compaction collapses history to generation 0; snapshot unchanged
     Dedup.compactBandIndex(spark, dir)
-    assert(Dedup.bandGen(spark, dir) == 0L)
+    assert(Stores.band.gen(spark, dir) == 0L)
     assert(pairs(Dedup.loadBandIndexSnapshot(spark, dir)) ==
       Set((1L, 11L), (5L, 12L)))
   }
@@ -84,7 +84,7 @@ class ManifestFamiliesSpec extends SparkSpec {
 
     Dedup.saveWinnowIndexCommitted(
       Dedup.buildWinnowIndex(corpus, "doc_id", "text"), dir)
-    assert(Dedup.winnowGen(spark, dir) == 0L)
+    assert(Stores.winnow.gen(spark, dir) == 0L)
     assert(Dedup.appendWinnowIndexCommitted(spark, dir, b1, "doc_id", "text",
       expectedGen = Some(0L)) == 1L)
     Dedup.appendWinnowIndex(spark, dir, torn, "doc_id", "text") // torn
@@ -98,17 +98,17 @@ class ManifestFamiliesSpec extends SparkSpec {
       Dedup.appendWinnowIndexCommitted(spark, dir, torn, "doc_id", "text",
         expectedGen = Some(0L))
     }
-    assert(Dedup.vacuumWinnowIndex(spark, dir).nonEmpty)
-    assert(Dedup.vacuumWinnowIndex(spark, dir).isEmpty)
+    assert(Stores.winnow.vacuum(spark, dir).nonEmpty)
+    assert(Stores.winnow.vacuum(spark, dir).isEmpty)
     assert(pairs(Dedup.loadWinnowIndex(spark, dir)) ==
       Set((1L, 11L), (5L, 12L)))
     // right-to-be-forgotten: doc 1 out — its twin must re-admit
-    Dedup.deleteFromWinnowIndex(spark, dir,
+    Stores.winnow.delete(spark, dir,
       Seq(1L).toDF("doc_id"), "doc_id")
     assert(pairs(Dedup.loadWinnowIndexSnapshot(spark, dir)) ==
       Set((5L, 12L)))
     Dedup.compactWinnowIndex(spark, dir)
-    assert(Dedup.winnowGen(spark, dir) == 0L)
+    assert(Stores.winnow.gen(spark, dir) == 0L)
     assert(pairs(Dedup.loadWinnowIndexSnapshot(spark, dir)) ==
       Set((5L, 12L)))
   }
@@ -150,11 +150,11 @@ class ManifestFamiliesSpec extends SparkSpec {
       Set((1L, 11L), (5L, 12L), (7L, 13L)))
     assert(pairs(Dedup.loadSimHashIndexSnapshot(spark, dir, Some(0L))) ==
       Set((1L, 11L)))
-    assert(Dedup.vacuumSimHashIndex(spark, dir).nonEmpty)
+    assert(Stores.simhash.vacuum(spark, dir).nonEmpty)
     assert(pairs(Dedup.loadSimHashIndex(spark, dir)) ==
       Set((1L, 11L), (5L, 12L)))
     Dedup.compactSimHashIndex(spark, dir)
-    assert(Dedup.simHashGen(spark, dir) == 0L)
+    assert(Stores.simhash.gen(spark, dir) == 0L)
     assert(pairs(Dedup.loadSimHashIndexSnapshot(spark, dir)) ==
       Set((1L, 11L), (5L, 12L)))
   }
@@ -184,10 +184,10 @@ class ManifestFamiliesSpec extends SparkSpec {
       Dedup.appendBloomIndexCommitted(spark, dir, k78, "fp",
         expectedGen = Some(0L))
     }
-    assert(Dedup.vacuumBloomIndex(spark, dir).nonEmpty)
+    assert(Stores.bloom.vacuum(spark, dir).nonEmpty)
     assert(bits(Dedup.loadBloomIndex(spark, dir)) == ref16)
     Dedup.compactBloomIndex(spark, dir)
-    assert(Dedup.bloomGen(spark, dir) == 0L)
+    assert(Stores.bloom.gen(spark, dir) == 0L)
     assert(bits(Dedup.loadBloomIndexSnapshot(spark, dir)) == ref16)
   }
 
@@ -206,7 +206,7 @@ class ManifestFamiliesSpec extends SparkSpec {
     Similarity.saveIvfIndexCommitted(
       Similarity.buildIvfIndex(seed, "vec_id", "embedding"), dir)
     Similarity.appendIvfIndexCommitted(spark, dir, batchA, "vec_id",
-      "embedding", expectedGen = Some(Similarity.ivfGen(spark, dir)))
+      "embedding", expectedGen = Some(Stores.ivf.gen(spark, dir)))
     Similarity.appendIvfIndex(spark, dir, torn, "vec_id", "embedding")
 
     // committed reference states, built independently
@@ -221,15 +221,15 @@ class ManifestFamiliesSpec extends SparkSpec {
     assert(rows(Similarity.loadIvfIndexSnapshot(spark, dir, Some(0L))) ==
       seedOnly)
     assert(rows(Similarity.loadIvfIndex(spark, dir)) != committed)
-    assert(Similarity.vacuumIvfIndex(spark, dir).nonEmpty)
+    assert(Stores.ivf.vacuum(spark, dir).nonEmpty)
     assert(rows(Similarity.loadIvfIndex(spark, dir)) == committed)
     intercept[IllegalStateException] {
       Similarity.appendIvfIndexCommitted(spark, dir, torn, "vec_id",
         "embedding", expectedGen = Some(0L))
     }
-    Similarity.vacuumIvfIndex(spark, dir)
+    Stores.ivf.vacuum(spark, dir)
     Similarity.compactIvfIndex(spark, dir)
-    assert(Similarity.ivfGen(spark, dir) == 0L)
+    assert(Stores.ivf.gen(spark, dir) == 0L)
     assert(rows(Similarity.loadIvfIndexSnapshot(spark, dir)) == committed)
   }
 
@@ -244,7 +244,7 @@ class ManifestFamiliesSpec extends SparkSpec {
 
     Dedup.saveLabelStoreCommitted(
       cc(Seq(1L, 2L, 3L, 4L, 5L, 6L), Seq((1L, 2L), (3L, 4L))), dir)
-    assert(Dedup.labelGen(spark, dir) == 0L)
+    assert(Stores.label.gen(spark, dir) == 0L)
     // committed increment: 7 joins component(1); 8 is a singleton
     Dedup.appendLabelsCommitted(spark, dir, Seq(7L, 8L).toDF("id"), "id",
       Seq((7L, 1L)).toDF("id_a", "id_b"), expectedGen = Some(0L))
@@ -265,10 +265,10 @@ class ManifestFamiliesSpec extends SparkSpec {
         spark.emptyDataFrame.select(lit(0L).as("id_a"), lit(0L).as("id_b"))
           .limit(0), expectedGen = Some(0L))
     }
-    assert(Dedup.vacuumLabelStore(spark, dir).nonEmpty)
+    assert(Stores.label.vacuum(spark, dir).nonEmpty)
     assert(resolved(Dedup.resolveLabels(spark, dir)) == committed)
     Dedup.compactLabelStore(spark, dir)
-    assert(Dedup.labelGen(spark, dir) == 0L)
+    assert(Stores.label.gen(spark, dir) == 0L)
     assert(resolved(Dedup.resolveLabelsSnapshot(spark, dir)) == committed)
   }
 
@@ -297,7 +297,7 @@ class ManifestFamiliesSpec extends SparkSpec {
     intercept[IllegalStateException] {
       MatView.appendAggStateCommitted(spark, dir, s3, expectedGen = Some(0L))
     }
-    assert(MatView.vacuumAggState(spark, dir).nonEmpty)
+    assert(Stores.agg.vacuum(spark, dir).nonEmpty)
     assert(served(MatView.loadAggState(spark, dir)) ==
       ref(s1.unionByName(s2)))
     // a committed retraction: counts/sums exact, extremes conservative
@@ -308,7 +308,7 @@ class ManifestFamiliesSpec extends SparkSpec {
       .select(col("cnt"), col("sum_v")).as[(Long, Long)].head()
     assert(after == ((2L, 30L)))
     MatView.compactAggState(spark, dir)
-    assert(MatView.aggGen(spark, dir) == 0L)
+    assert(Stores.agg.gen(spark, dir) == 0L)
   }
 
   test("positional index: torn append invisible; phrase time travel; vacuum") {
@@ -339,16 +339,16 @@ class ManifestFamiliesSpec extends SparkSpec {
       Retrieval.appendPositionalIndexCommitted(spark, dir, torn, "doc_id",
         "text", expectedGen = Some(0L))
     }
-    assert(Retrieval.vacuumPositionalIndex(spark, dir).nonEmpty)
+    assert(Stores.positional.vacuum(spark, dir).nonEmpty)
     assert(matches(Retrieval.loadPositionalIndex(spark, dir)) ==
       Set((100L, 1L, 1L), (100L, 3L, 1L)))
     // deletes stay retroactive through historical reads
-    Retrieval.deleteFromPositionalIndex(spark, dir, Seq(1L).toDF("doc_id"),
+    Stores.positional.delete(spark, dir, Seq(1L).toDF("doc_id"),
       "doc_id")
     assert(matches(
       Retrieval.loadPositionalIndexSnapshot(spark, dir, Some(0L))).isEmpty)
     Retrieval.compactPositionalIndex(spark, dir)
-    assert(Retrieval.positionalGen(spark, dir) == 0L)
+    assert(Stores.positional.gen(spark, dir) == 0L)
     assert(matches(Retrieval.loadPositionalIndexSnapshot(spark, dir)) ==
       Set((100L, 3L, 1L)))
   }
@@ -377,19 +377,19 @@ class ManifestFamiliesSpec extends SparkSpec {
     assert(Dedup.appendBandIndexCommittedIdempotent(spark, dir, b0,
       "doc_id", "text", batchId = 0L).isEmpty)
     assert(parquetStamps(s"$dir/bands", s"$dir/sets") == stamps)
-    assert(Dedup.bandGen(spark, dir) == 1L)
+    assert(Stores.band.gen(spark, dir) == 1L)
     // torn first attempt of batch 1 (data landed, no manifest): the
     // retry's listing diff commits ONLY the retry's files; the torn
     // files stay orphans for vacuum
     Dedup.appendBandIndex(spark, dir, b1, "doc_id", "text")
     assert(Dedup.appendBandIndexCommittedIdempotent(spark, dir, b1,
       "doc_id", "text", batchId = 1L).contains(2L))
-    assert(Dedup.vacuumBandIndex(spark, dir).nonEmpty)
+    assert(Stores.band.vacuum(spark, dir).nonEmpty)
     assert(pairs == Set((1L, 11L), (5L, 12L), (6L, 13L)))
     // the ledger rides the L0 re-base — a late replay after background
     // maintenance still finds both ids
-    assert(Dedup.compactBandL0(spark, dir, minRuns = 1))
-    assert(Dedup.bandGen(spark, dir) == 0L)
+    assert(Stores.band.compactL0(spark, dir, minRuns = 1))
+    assert(Stores.band.gen(spark, dir) == 0L)
     assert(StoreFiles.committedBatchIds(spark, dir) == Set(0L, 1L))
     assert(Dedup.appendBandIndexCommittedIdempotent(spark, dir, b1,
       "doc_id", "text", batchId = 1L).isEmpty)
@@ -414,10 +414,10 @@ class ManifestFamiliesSpec extends SparkSpec {
       Retrieval.buildPostingsIndex(corpus, "doc_id", "text"), dir)
     val policy = graft.operators.CompactionPolicy(maxRuns = 2)
     DocumentStreams.postingsIngestCommittedBatch(spark, dir, policy)(b0, 0L)
-    assert(Retrieval.postingsGen(spark, dir) == 1L)
+    assert(Stores.postings.gen(spark, dir) == 1L)
     // the second trigger hits maxRuns: L0 re-bases, ledger carried
     DocumentStreams.postingsIngestCommittedBatch(spark, dir, policy)(b1, 1L)
-    assert(Retrieval.postingsGen(spark, dir) == 0L)
+    assert(Stores.postings.gen(spark, dir) == 0L)
     assert(StoreFiles.committedBatchIds(spark, dir) == Set(0L, 1L))
     // a doubled replay would double postings rows AND stats totals —
     // the serve must equal the in-flight build over corpus ∪ b0 ∪ b1,
@@ -430,7 +430,7 @@ class ManifestFamiliesSpec extends SparkSpec {
     DocumentStreams.postingsIngestCommittedBatch(spark, dir, policy)(b0, 0L)
     DocumentStreams.postingsIngestCommittedBatch(spark, dir, policy)(b1, 1L)
     assert(parquetStamps(s"$dir/postings", s"$dir/stats") == stamps)
-    assert(Retrieval.postingsGen(spark, dir) == 0L)
+    assert(Stores.postings.gen(spark, dir) == 0L)
     assert(served == want)
   }
 
@@ -457,14 +457,14 @@ class ManifestFamiliesSpec extends SparkSpec {
     assert(storedIds == Set(1L, 2L, 6L, 8L),
       "a twin of an earlier ADMISSION must be rejected by the store chain")
     // the policy re-based mid-stream; the ledger survived
-    assert(Dedup.winnowGen(spark, dir) == 0L)
+    assert(Stores.winnow.gen(spark, dir) == 0L)
     assert(StoreFiles.committedBatchIds(spark, dir) == Set(0L, 1L))
     // replays append nothing
     val stamps = parquetStamps(s"$dir/fps")
     DocumentStreams.winnowIngestCommittedBatch(spark, dir, policy)(b0, 0L)
     DocumentStreams.winnowIngestCommittedBatch(spark, dir, policy)(b1, 1L)
     assert(parquetStamps(s"$dir/fps") == stamps)
-    assert(Dedup.winnowGen(spark, dir) == 0L && storedIds == Set(1L, 2L, 6L, 8L))
+    assert(Stores.winnow.gen(spark, dir) == 0L && storedIds == Set(1L, 2L, 6L, 8L))
   }
 
   test("ivf: exactly-once store-maintaining stream ingest — replay " +
@@ -487,10 +487,10 @@ class ManifestFamiliesSpec extends SparkSpec {
       Similarity.buildIvfIndex(seed, "vec_id", "embedding"), dir)
     val policy = graft.operators.CompactionPolicy(maxRuns = 2)
     DocumentStreams.ivfIngestCommittedBatch(spark, dir, policy)(b0, 0L)
-    assert(Similarity.ivfGen(spark, dir) == 1L)
+    assert(Stores.ivf.gen(spark, dir) == 1L)
     // the second trigger hits maxRuns: L0 re-bases, ledger carried
     DocumentStreams.ivfIngestCommittedBatch(spark, dir, policy)(b1, 1L)
-    assert(Similarity.ivfGen(spark, dir) == 0L)
+    assert(Stores.ivf.gen(spark, dir) == 0L)
     assert(StoreFiles.committedBatchIds(spark, dir) == Set(0L, 1L))
     // serve must equal an independently-built store over seed ∪ b0 ∪ b1
     // (a doubled replay would duplicate candidate rows)
@@ -508,7 +508,7 @@ class ManifestFamiliesSpec extends SparkSpec {
     DocumentStreams.ivfIngestCommittedBatch(spark, dir, policy)(b0, 0L)
     DocumentStreams.ivfIngestCommittedBatch(spark, dir, policy)(b1, 1L)
     assert(parquetStamps(s"$dir/assignments") == stamps)
-    assert(Similarity.ivfGen(spark, dir) == 0L)
+    assert(Stores.ivf.gen(spark, dir) == 0L)
     assert(served == want)
   }
 
@@ -532,9 +532,9 @@ class ManifestFamiliesSpec extends SparkSpec {
       Similarity.buildPqIndex(seed, "vec_id", "embedding"), dir)
     val policy = graft.operators.CompactionPolicy(maxRuns = 2)
     DocumentStreams.pqIngestCommittedBatch(spark, dir, policy)(b0, 0L)
-    assert(Similarity.pqGen(spark, dir) == 1L)
+    assert(Stores.pq.gen(spark, dir) == 1L)
     DocumentStreams.pqIngestCommittedBatch(spark, dir, policy)(b1, 1L)
-    assert(Similarity.pqGen(spark, dir) == 0L)
+    assert(Stores.pq.gen(spark, dir) == 0L)
     assert(StoreFiles.committedBatchIds(spark, dir) == Set(0L, 1L))
     val refDir = tmp("graft_pq_ledger_ref")
     Similarity.savePqIndex(
@@ -550,7 +550,7 @@ class ManifestFamiliesSpec extends SparkSpec {
     DocumentStreams.pqIngestCommittedBatch(spark, dir, policy)(b0, 0L)
     DocumentStreams.pqIngestCommittedBatch(spark, dir, policy)(b1, 1L)
     assert(parquetStamps(s"$dir/codes") == stamps)
-    assert(Similarity.pqGen(spark, dir) == 0L)
+    assert(Stores.pq.gen(spark, dir) == 0L)
     assert(served == want)
   }
 
@@ -571,11 +571,11 @@ class ManifestFamiliesSpec extends SparkSpec {
         Seq("lang", "source"), "tok"), dir)
     val policy = graft.operators.CompactionPolicy(maxRuns = 2)
     DocumentStreams.aggIngestCommittedBatch(spark, dir, policy)(b0, 0L)
-    assert(MatView.aggGen(spark, dir) == 1L)
+    assert(Stores.agg.gen(spark, dir) == 1L)
     // second trigger hits maxRuns: the delta pile collapses to one row
     // per key in a fresh run, base untouched, ledger carried
     DocumentStreams.aggIngestCommittedBatch(spark, dir, policy)(b1, 1L)
-    assert(MatView.aggGen(spark, dir) == 0L)
+    assert(Stores.agg.gen(spark, dir) == 0L)
     assert(StoreFiles.committedBatchIds(spark, dir) == Set(0L, 1L))
     // serve = the from-scratch aggregate over corpus ∪ b0 ∪ b1
     val want = MatView.serveAgg(MatView.buildAggState(
@@ -590,12 +590,11 @@ class ManifestFamiliesSpec extends SparkSpec {
     DocumentStreams.aggIngestCommittedBatch(spark, dir, policy)(b0, 0L)
     DocumentStreams.aggIngestCommittedBatch(spark, dir, policy)(b1, 1L)
     assert(parquetStamps(s"$dir/state") == stamps)
-    assert(MatView.aggGen(spark, dir) == 0L && served == want)
+    assert(Stores.agg.gen(spark, dir) == 0L && served == want)
   }
 
   test("idempotent append is DESCRIPTOR-level: any family gets the " +
       "batch ledger through appendCommittedIdempotent — postings shown") {
-    import graft.operators.Stores
     val dir = tmp("graft_postings_idem")
     val corpus = Seq((1L, sA), (2L, filler1)).toDF("doc_id", "text")
     val b0 = Seq((5L, sB)).toDF("doc_id", "text")
@@ -621,7 +620,7 @@ class ManifestFamiliesSpec extends SparkSpec {
       Retrieval.appendPostingsIndex(spark, dir, b0, "doc_id", "text")
     }.isEmpty)
     assert(parquetStamps(s"$dir/postings", s"$dir/stats") == stamps)
-    assert(Retrieval.postingsGen(spark, dir) == 1L)
+    assert(Stores.postings.gen(spark, dir) == 1L)
     assert(served == after)
   }
 
@@ -631,7 +630,7 @@ class ManifestFamiliesSpec extends SparkSpec {
     val dir = tmp("graft_suffix_manifest")
     val v1 = Seq((1L, sA), (2L, filler1), (3L, sA)).toDF("doc_id", "text")
     Suffix.saveDupIndexCommitted(spark, dir, v1, "doc_id", "text")
-    assert(Suffix.dupIndexGen(spark, dir) == 0L)
+    assert(Stores.suffix.gen(spark, dir) == 0L)
     def spans(minLen: Long): Set[(Long, Long, Long)] =
       Suffix.maximalDupSpansFrom(Suffix.loadDupIndexSnapshot(spark, dir),
           "doc_id", minLen)
@@ -645,15 +644,15 @@ class ManifestFamiliesSpec extends SparkSpec {
     // and the serve flips atomically to the new corpus
     val v2 = Seq((1L, sA), (2L, filler1), (3L, filler2)).toDF("doc_id", "text")
     Suffix.saveDupIndexCommitted(spark, dir, v2, "doc_id", "text")
-    assert(Suffix.dupIndexGen(spark, dir) == 0L)
+    assert(Stores.suffix.gen(spark, dir) == 0L)
     assert(spans(10L).isEmpty) // the twin is gone; nothing repeats
     // a torn rebuild (data written, no commit) leaves orphans the
     // snapshot never sees and vacuum reclaims
     Suffix.buildDupIndex(v1, "doc_id", "text").duplens
       .write.mode("append").parquet(s"$dir/duplens")
     assert(spans(10L).isEmpty)
-    assert(Suffix.vacuumDupIndex(spark, dir).nonEmpty)
-    assert(Suffix.vacuumDupIndex(spark, dir).isEmpty)
+    assert(Stores.suffix.vacuum(spark, dir).nonEmpty)
+    assert(Stores.suffix.vacuum(spark, dir).isEmpty)
     // every committed duplens file carries a doc_id envelope (the
     // range-clustered save makes them disjoint per file)
     val files = graft.operators.StoreFiles.manifestPaths(spark, dir)
@@ -672,7 +671,7 @@ class ManifestFamiliesSpec extends SparkSpec {
     val base = mk(Seq((1L, "arx", sA), (2L, "arx", filler1),
       (3L, "web", sB), (4L, "web", filler2), (5L, "wiki", sC)))
     DocStore.saveDocStoreCommitted(spark, dir, base, numFiles = 3)
-    assert(DocStore.docStoreGen(spark, dir) == 0L)
+    assert(Stores.docstore.gen(spark, dir) == 0L)
     def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
       df.select(col("doc_id")).as[Long].collect().toSet
     assert(ids(DocStore.loadDocStoreSnapshot(spark, dir)) ==
@@ -706,7 +705,7 @@ class ManifestFamiliesSpec extends SparkSpec {
     // time travel to the save; tombstone-delete is retroactive
     assert(ids(DocStore.loadDocStoreSnapshot(spark, dir, Some(0L))) ==
       Set(1L, 2L, 3L, 4L, 5L))
-    DocStore.deleteDocs(spark, dir, Seq(4L).toDF("doc_id"))
+    Stores.docstore.delete(spark, dir, Seq(4L).toDF("doc_id"), "doc_id")
     assert(ids(DocStore.loadDocStoreSnapshot(spark, dir)) ==
       Set(1L, 2L, 3L, 5L, 6L))
     assert(ids(DocStore.loadDocStoreSourceRange(spark, dir, "web", "web"))
@@ -714,8 +713,8 @@ class ManifestFamiliesSpec extends SparkSpec {
     assert(ids(DocStore.loadDocStoreSnapshot(spark, dir, Some(0L))) ==
       Set(1L, 2L, 3L, 5L))
     // vacuum reclaims exactly the torn write's orphan
-    assert(DocStore.vacuumDocStore(spark, dir).nonEmpty)
-    assert(DocStore.vacuumDocStore(spark, dir).isEmpty)
+    assert(Stores.docstore.vacuum(spark, dir).nonEmpty)
+    assert(Stores.docstore.vacuum(spark, dir).isEmpty)
     assert(ids(DocStore.loadDocStoreSnapshot(spark, dir)) ==
       Set(1L, 2L, 3L, 5L, 6L))
   }
@@ -735,12 +734,12 @@ class ManifestFamiliesSpec extends SparkSpec {
     DocStore.saveDocStoreCommitted(spark, dir, seed, numFiles = 2)
     val policy = graft.operators.CompactionPolicy(maxRuns = 2)
     DocumentStreams.docIngestCommittedBatch(spark, dir, policy)(b0, 0L)
-    assert(DocStore.docStoreGen(spark, dir) == 1L)
+    assert(Stores.docstore.gen(spark, dir) == 1L)
     assert(ids == Set(1L, 2L, 5L, 6L))
     // the second trigger hits maxRuns: L0 re-bases CLUSTERED on
     // (source, doc_id), the batch-id ledger carried
     DocumentStreams.docIngestCommittedBatch(spark, dir, policy)(b1, 1L)
-    assert(DocStore.docStoreGen(spark, dir) == 0L)
+    assert(Stores.docstore.gen(spark, dir) == 0L)
     assert(StoreFiles.committedBatchIds(spark, dir) == Set(0L, 1L))
     assert(ids == Set(1L, 2L, 5L, 6L, 7L))
     // a doubled replay would duplicate the bronze DOCUMENTS themselves
@@ -749,7 +748,7 @@ class ManifestFamiliesSpec extends SparkSpec {
     DocumentStreams.docIngestCommittedBatch(spark, dir, policy)(b0, 0L)
     DocumentStreams.docIngestCommittedBatch(spark, dir, policy)(b1, 1L)
     assert(parquetStamps(s"$dir/docs") == stamps)
-    assert(DocStore.docStoreGen(spark, dir) == 0L)
+    assert(Stores.docstore.gen(spark, dir) == 0L)
     assert(ids == Set(1L, 2L, 5L, 6L, 7L))
     // the serve keeps the bronze contract end-to-end: source-ranged
     // reads still prune on the re-based clustered envelopes
@@ -802,7 +801,7 @@ class ManifestFamiliesSpec extends SparkSpec {
       .toDF("doc_id", "source", "text")
     Suffix.saveSurvTrimCommitted(spark, dir, surv, "doc_id", "text",
       numFiles = 2)
-    assert(Suffix.survTrimGen(spark, dir) == 0L)
+    assert(Stores.survtrim.gen(spark, dir) == 0L)
     val (idx, storedSurv) = Suffix.loadSurvTrimSnapshot(spark, dir)
     // the committed surv sub IS the dedup output, columns intact
     assert(storedSurv.columns.toSet == Set("doc_id", "source", "text"))

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Retrieval
+import graft.operators.{Retrieval, Stores}
 import org.apache.spark.sql.functions._
 
 /** Snapshot-manifest commits for the postings index: the manifest
@@ -115,7 +115,7 @@ class ManifestSpec extends SparkSpec {
       corpus.filter(col("doc_id").isin(3L, 4L)), "doc_id", "text")
     Retrieval.appendPostingsIndexCommitted(spark, dir,
       corpus.filter(col("doc_id") > 4), "doc_id", "text")
-    assert(Retrieval.postingsGen(spark, dir) == 2L)
+    assert(Stores.postings.gen(spark, dir) == 2L)
     def at(g: Long) =
       Retrieval.bm25SearchIndex(queries,
           Retrieval.loadPostingsIndexSnapshot(spark, dir, Some(g)),
@@ -138,7 +138,7 @@ class ManifestSpec extends SparkSpec {
     Retrieval.savePostingsIndexCommitted(
       Retrieval.buildPostingsIndex(corpus.filter(col("doc_id") <= 4),
         "doc_id", "text", nBuckets = 4), dir)
-    val g = Retrieval.postingsGen(spark, dir)
+    val g = Stores.postings.gen(spark, dir)
     assert(Retrieval.appendPostingsIndexCommitted(spark, dir,
       corpus.filter(col("doc_id") === 5L), "doc_id", "text",
       expectedGen = Some(g)) == g + 1)
@@ -153,8 +153,8 @@ class ManifestSpec extends SparkSpec {
     assert(serveSnap(dir) == want)
     // vacuum physically removes exactly the orphans; serve unchanged
     // and the raw directory load converges to the committed state
-    assert(Retrieval.vacuumPostingsIndex(spark, dir).nonEmpty)
-    assert(Retrieval.vacuumPostingsIndex(spark, dir).isEmpty)
+    assert(Stores.postings.vacuum(spark, dir).nonEmpty)
+    assert(Stores.postings.vacuum(spark, dir).isEmpty)
     assert(serveSnap(dir) == want)
     assert(serveRaw(dir) == want)
   }
@@ -174,7 +174,7 @@ class ManifestSpec extends SparkSpec {
     Similarity.savePqIndexCommitted(
       Similarity.buildPqIndex(seed, "vec_id", "embedding"), dir)
     Similarity.appendPqIndexCommitted(spark, dir, batchA, "vec_id",
-      "embedding", expectedGen = Some(Similarity.pqGen(spark, dir)))
+      "embedding", expectedGen = Some(Stores.pq.gen(spark, dir)))
     Similarity.appendPqIndex(spark, dir, torn, "vec_id", "embedding")
 
     // the committed reference states, built independently
@@ -191,18 +191,18 @@ class ManifestSpec extends SparkSpec {
       seedOnly)
     assert(rows(Similarity.loadPqIndex(spark, dir)) != committed)
     // vacuum reclaims the torn files; raw converges to committed
-    assert(Similarity.vacuumPqIndex(spark, dir).nonEmpty)
-    assert(Similarity.vacuumPqIndex(spark, dir).isEmpty)
+    assert(Stores.pq.vacuum(spark, dir).nonEmpty)
+    assert(Stores.pq.vacuum(spark, dir).isEmpty)
     assert(rows(Similarity.loadPqIndex(spark, dir)) == committed)
     // OCC: a stale expectation refuses
     intercept[IllegalStateException] {
       Similarity.appendPqIndexCommitted(spark, dir, torn, "vec_id",
         "embedding", expectedGen = Some(0L))
     }
-    Similarity.vacuumPqIndex(spark, dir)
+    Stores.pq.vacuum(spark, dir)
     // compaction rewrites the committed snapshot and collapses history
     Similarity.compactPqIndex(spark, dir)
-    assert(Similarity.pqGen(spark, dir) == 0L)
+    assert(Stores.pq.gen(spark, dir) == 0L)
     assert(rows(Similarity.loadPqIndexSnapshot(spark, dir)) == committed)
   }
 

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Similarity
+import graft.operators.{Similarity, Stores}
 import org.apache.spark.sql.functions._
 
 /** MEASURED read-pruning for the stored ANN indexes — the read-side
@@ -148,7 +148,7 @@ class PruningSpec extends SparkSpec {
     // footers, survivors keep theirs, serve rows unchanged, and the
     // untouched base is still skippable
     val before = ranged().collect().toSet
-    assert(Retrieval.compactPostingsL0(spark, dir, minRuns = 1))
+    assert(Stores.postings.compactL0(spark, dir, minRuns = 1))
     val post2 = StoreFiles.manifestPaths(spark, dir)
       .filter(_.contains("/postings/"))
     val st2 = StoreFiles.fileStats(spark, dir)
@@ -276,7 +276,7 @@ class PruningSpec extends SparkSpec {
     val before = ranged().collect().toSet
     // CLUSTERED re-base (repartitionByRange on (cell, neighbor_id)):
     // the compacted run's files get tight, near-disjoint id envelopes
-    assert(Similarity.compactPqL0(spark, dir, minRuns = 1))
+    assert(Stores.pq.compactL0(spark, dir, minRuns = 1))
     val postFiles = codesFiles()
     val compacted = postFiles.filterNot(preFiles.toSet)
     assert(compacted.nonEmpty, "the re-base wrote no compacted files")

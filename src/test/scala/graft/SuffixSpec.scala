@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Curation, Suffix}
+import graft.operators.{Curation, Stores, Suffix}
 import org.apache.spark.sql.functions._
 
 /** Prefix-doubling suffix ranks + unbounded maximal duplicated spans:
@@ -263,7 +263,7 @@ class SuffixSpec extends SparkSpec {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_suffix_store").toString
     Suffix.saveDupIndexCommitted(spark, dir, docs, "doc_id", "text")
-    assert(Suffix.dupIndexGen(spark, dir) == 0L)
+    assert(Stores.suffix.gen(spark, dir) == 0L)
     val idx = Suffix.loadDupIndexSnapshot(spark, dir)
     // serve ≡ inline at minLen=8 on every shape
     def spanSet(df: org.apache.spark.sql.DataFrame) =

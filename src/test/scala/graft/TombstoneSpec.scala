@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Dedup, Retrieval, Similarity}
+import graft.operators.{Dedup, Retrieval, Similarity, Stores}
 import org.apache.spark.sql.functions._
 
 /** Tombstone-delete lifecycle over the stored postings and PQ indexes:
@@ -135,7 +135,7 @@ class TombstoneSpec extends SparkSpec {
         "vec_id", "embedding", k = 5)
       .as[(Long, Long, Long, Int)].collect().toSet
     val stamps = parquetStamps(s"$dir/codes")
-    Similarity.deleteFromPqIndex(spark, dir,
+    Stores.pq.delete(spark, dir,
       emb.filter(col("vec_id") % 7 === 3).select("vec_id"), "vec_id")
     assert(parquetStamps(s"$dir/codes") == stamps) // append-only delete
     assert(pqServe(dir, emb) == expected)
@@ -162,7 +162,7 @@ class TombstoneSpec extends SparkSpec {
     assert(full.nonEmpty) // planted near-dups must cross the split
     // pick a corpus member of a known pair and delete it
     val victim = full.map { case (a, b, _) => if (a % 10 == 0) b else a }.head
-    Dedup.deleteFromBandIndex(spark, dir,
+    Stores.band.delete(spark, dir,
       Seq(victim).toDF("doc_id"), "doc_id")
     val after = Dedup.minHashLshProbe(Dedup.loadBandIndex(spark, dir),
         batch, "doc_id", "text")
@@ -196,7 +196,7 @@ class TombstoneSpec extends SparkSpec {
     val dir = tmpDir("graft_tomb_sh")
     Dedup.saveSimHashIndex(
       Dedup.buildSimHashIndex(corpus, "doc_id", "text"), dir)
-    Dedup.deleteFromSimHashIndex(spark, dir,
+    Stores.simhash.delete(spark, dir,
       corpus.filter(col("doc_id") % 7 === 3).select("doc_id"), "doc_id")
     val after = Dedup.simHashProbe(Dedup.loadSimHashIndex(spark, dir),
         batch, "doc_id", "text")
@@ -223,12 +223,12 @@ class TombstoneSpec extends SparkSpec {
       Dedup.connectedComponents(nodes, "id", edges), dir)
     // delete the BRIDGE doc 2: members 1 and 3 keep ONE component (no
     // re-split — documented), labeled by the full-graph min 1
-    Dedup.deleteFromLabelStore(spark, dir, Seq(2L).toDF("id"), "id")
+    Stores.label.delete(spark, dir, Seq(2L).toDF("id"), "id")
     val view = Dedup.resolveLabels(spark, dir)
       .as[(Long, Long)].collect().toSet
     assert(view == Set((1L, 1L), (3L, 1L), (5L, 5L), (6L, 5L)))
     // deleting the min-id anchor: its id survives as an opaque label
-    Dedup.deleteFromLabelStore(spark, dir, Seq(5L).toDF("id"), "id")
+    Stores.label.delete(spark, dir, Seq(5L).toDF("id"), "id")
     assert(Dedup.resolveLabels(spark, dir)
       .as[(Long, Long)].collect().toSet ==
       Set((1L, 1L), (3L, 1L), (6L, 5L)))
@@ -260,7 +260,7 @@ class TombstoneSpec extends SparkSpec {
           raw.assignments.filter(col("neighbor_id") % 7 =!= 3)),
         "vec_id", "embedding", k = 5)
       .collect().toSet
-    Similarity.deleteFromIvfIndex(spark, dir,
+    Stores.ivf.delete(spark, dir,
       emb.filter(col("vec_id") % 7 === 3).select("vec_id"), "vec_id")
     assert(Similarity.ivfSearchIndex(queries,
         Similarity.loadIvfIndex(spark, dir), "vec_id", "embedding", k = 5)
