@@ -2,17 +2,22 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Central SparkSession factory so every entrypoint (tests, Bench, Verify,
-  * pipeline drivers) runs with the same scale-aware configuration.
+/** Central SparkSession factory: every entrypoint (tests, Bench, Verify,
+  * the benchmark harness, pipeline drivers) builds its session here, so
+  * each setting exists once.
   *
-  * Tuned for the driver's local[32] harness but written for a real cluster:
-  * AQE handles runtime re-planning (skew joins, shuffle coalescing), shuffle
-  * partitions default to the local core count instead of 200, and parquet
-  * nanosecond timestamps (the `events` table) are read as longs that
-  * [[Tables]] converts explicitly.
+  * Runs `local[n]` on the host's cores (`SPARK_GRAFT_CPUS` overrides) but
+  * is written for a real cluster: AQE handles runtime re-planning (skew
+  * joins, shuffle coalescing), shuffle partitions default to the core
+  * count instead of 200, and parquet nanosecond timestamps (the `events`
+  * table) are read as longs that [[Tables]] converts explicitly.
   */
 object GraftSession {
-  def builder(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")): SparkSession.Builder =
+  /** Local cores: `SPARK_GRAFT_CPUS`, else every core of the host. */
+  def defaultCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
+
+  def builder(cpus: String = defaultCpus): SparkSession.Builder =
     SparkSession
       .builder()
       .master(s"local[$cpus]")
@@ -25,6 +30,13 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
         listParallelThreshold)
+      // static: sizes the JVM-wide cache of compiled whole-stage and
+      // expression classes. A warm arXiv op (ingest → clean → citations
+      // → reports) uses about 207 generated classes and one pass of the
+      // benchmarked catalog rows about 145 (`codegen.classes` in a traced
+      // perfbench run); Spark's default of 100 evicted them, so every
+      // warm op recompiled all of them. 2000 holds both five times over.
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "127.0.0.1")
 
@@ -59,14 +71,4 @@ object GraftSession {
     */
   private def listParallelThreshold: String =
     sys.env.getOrElse("SPARK_GRAFT_LIST_PARALLEL_THRESHOLD", "4096")
-
-  /** Apply graft configs to an externally-created builder (Bench/Verify). */
-  def tune(b: SparkSession.Builder): SparkSession.Builder =
-    b.config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        listParallelThreshold)
 }

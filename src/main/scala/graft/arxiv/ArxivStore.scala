@@ -1,7 +1,9 @@
 package graft.arxiv
 
+import graft.Parallel
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.types.StructType
 
 /** The pipeline's table state — the Spark analog of the reference's
@@ -46,11 +48,25 @@ final case class ArxivStore(
   private def all: Seq[DataFrame] = Seq(publications, citations, authors,
     publicationVenues, categories, authorship, publicationCategory, logTable)
 
-  /** Force every table to compute (fills the caches) — call before
+  /** Fill every table's cache that is not loaded yet — call before
     * unpersisting a predecessor store whose frames this one's lineage
-    * still references.
+    * still references. A table the stage passed through unchanged shares
+    * its predecessor's loaded entry and costs nothing. Each remaining
+    * table is filled by one `noop` write of the cached frame (a scan
+    * without the shuffle a `count()` adds), and those writes run at once,
+    * one thread per table (see [[graft.Parallel]]). Concurrent fills of
+    * shared lineage meet in the block manager, which computes each
+    * cached partition once.
     */
-  def materialize(): ArxivStore = { all.foreach(_.count()); this }
+  def materialize(): ArxivStore = {
+    Parallel.map(all.filterNot(loaded), all.size)(
+      _.write.format("noop").mode("overwrite").save())
+    this
+  }
+
+  private def loaded(df: DataFrame): Boolean =
+    df.sparkSession.sharedState.cacheManager.lookupCachedData(df)
+      .exists(_.cachedRepresentation.cacheBuilder.isCachedColumnBuffersLoaded)
 
   /** Release this store's cached tables (safe only after successors are
     * materialized — see [[materialize]]).

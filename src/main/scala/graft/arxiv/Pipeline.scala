@@ -75,7 +75,8 @@ object Pipeline {
           // so without this the retry would only ever guard plan
           // construction while real failures surfaced later, outside it.
           // Checkpoint mode materializes by WRITING (durable lineage
-          // break, overwrite-idempotent under retry); cache mode counts.
+          // break, overwrite-idempotent under retry); cache mode fills
+          // the caches of the tables the stage changed.
           config.checkpointDir match {
             case Some(dir) =>
               // pin the stage result across the 8 table writes: the audit

@@ -977,7 +977,7 @@ object Similarity {
     val q = corpus
       .select(col(idCol).as("id"), quantize(col(vecCol)).as("v"))
       .localCheckpoint()
-    val (coarse, bounds) = par2(
+    val (coarse, bounds) = graft.Parallel.both(
       trainCentroidsQ(q, nlist, iters),
       trainSq8BoundsQ(q))
     if (coarse.isEmpty)
@@ -1026,31 +1026,6 @@ object Similarity {
   /** Train both quantizers and encode the corpus. `codes` has
     * (neighbor_id, cell, codes) — no vector column survives.
     */
-  /** Run two independent driver-side training loops CONCURRENTLY
-    * (guide §2.6 — actions are only sequential because the driver calls
-    * them sequentially): the coarse-centroid and codebook trainings
-    * read the same pinned corpus and share nothing else, so their
-    * per-iteration jobs overlap instead of queueing. Results are the
-    * byte-identical arrays the sequential calls produce.
-    */
-  private def par2[A, B](fa: => A, fb: => B): (A, B) = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    try {
-      val fut1 = pool.submit(new java.util.concurrent.Callable[A] {
-        override def call(): A = fa
-      })
-      val fut2 = pool.submit(new java.util.concurrent.Callable[B] {
-        override def call(): B = fb
-      })
-      def get[T](f: java.util.concurrent.Future[T]): T =
-        try f.get()
-        catch {
-          case e: java.util.concurrent.ExecutionException => throw e.getCause
-        }
-      (get(fut1), get(fut2))
-    } finally { pool.shutdown(); () }
-  }
-
   /** The shared first half of every PQ build: quantize + PIN the corpus
     * once (one materialization feeds the 2·(iters+1) training passes
     * AND the encode, where the lazy form re-read and re-quantized the
@@ -1062,7 +1037,7 @@ object Similarity {
     val q = corpus
       .select(col(idCol).as("id"), quantize(col(vecCol)).as("v"))
       .localCheckpoint()
-    val (centroids, books) = par2(
+    val (centroids, books) = graft.Parallel.both(
       trainCentroidsQ(q, nlist, iters),
       trainPqCodebooksQ(q, nSub, ksub, iters))
     (q, centroids, books)

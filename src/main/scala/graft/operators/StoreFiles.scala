@@ -423,8 +423,7 @@ private[graft] object StoreFiles {
       // envelopes of a file (the old form opened every file twice),
       // and files are footer-read CONCURRENTLY on a bounded driver
       // pool — commit latency stops scaling linearly with the batch's
-      // file count (per-file order inside the result is preserved:
-      // futures are joined in submission order)
+      // file count (results keep the sorted file order)
       def headersOf(f: String, cs: Seq[String]): Seq[String] = {
         val blocks = footerBlocks(conf, f)
         val longs = longStatsOfBlocks(blocks, cs)
@@ -436,23 +435,7 @@ private[graft] object StoreFiles {
               s"${b64.encodeToString(mx)}|$f"
           }
       }
-      if (tagged.size <= 1) tagged.flatMap { case (f, cs) => headersOf(f, cs) }
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(8, tagged.size))
-        try tagged.map { case (f, cs) =>
-          pool.submit(new java.util.concurrent.Callable[Seq[String]] {
-            override def call(): Seq[String] = headersOf(f, cs)
-          })
-        }.flatMap { fut =>
-          try fut.get()
-          catch { // surface the worker's own exception, not the wrapper
-            case e: java.util.concurrent.ExecutionException =>
-              throw e.getCause
-          }
-        }
-        finally { pool.shutdown(); () }
-      }
+      graft.Parallel.map(tagged, 8) { case (f, cs) => headersOf(f, cs) }.flatten
     }
 
   /** The committed STRING zone maps of the active epoch:
