@@ -239,7 +239,8 @@ object SparkEntry {
     }),
 
     // A3 SERIAL-style surrogate-key allocation: dense ids for new dim
-    // values, distributed (sort + zipWithIndex, no single-partition window).
+    // values (numbered on the driver within budget, else sort +
+    // zipWithIndex; no single-partition window).
     "q27_surrogate_keys" -> ((s, dir) => {
       val dim = t(s, dir, "nation")
         .select(col("n_nationkey").cast("long").as("id"), col("n_name").as("name"))

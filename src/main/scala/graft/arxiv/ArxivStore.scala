@@ -1,6 +1,7 @@
 package graft.arxiv
 
 import graft.Parallel
+import graft.operators.Relational
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
@@ -34,16 +35,21 @@ final case class ArxivStore(
 
   /** Pin every table in memory — between-cycle state must re-read the
     * UPDATED tables (SURVEY §2.13 D4), so callers checkpoint via cache.
+    * A table that plans to a local relation (its rows already sit in the
+    * plan on the driver) is left as it is: there is nothing to compute.
     */
-  def cached(): ArxivStore = copy(
-    publications = publications.cache(),
-    citations = citations.cache(),
-    authors = authors.cache(),
-    publicationVenues = publicationVenues.cache(),
-    categories = categories.cache(),
-    authorship = authorship.cache(),
-    publicationCategory = publicationCategory.cache(),
-    logTable = logTable.cache())
+  def cached(): ArxivStore = {
+    def pin(df: DataFrame) = if (driverLocal(df)) df else df.cache()
+    copy(
+      publications = pin(publications),
+      citations = pin(citations),
+      authors = pin(authors),
+      publicationVenues = pin(publicationVenues),
+      categories = pin(categories),
+      authorship = pin(authorship),
+      publicationCategory = pin(publicationCategory),
+      logTable = pin(logTable))
+  }
 
   private def all: Seq[DataFrame] = Seq(publications, citations, authors,
     publicationVenues, categories, authorship, publicationCategory, logTable)
@@ -51,7 +57,8 @@ final case class ArxivStore(
   /** Fill every table's cache that is not loaded yet — call before
     * unpersisting a predecessor store whose frames this one's lineage
     * still references. A table the stage passed through unchanged shares
-    * its predecessor's loaded entry and costs nothing. Each remaining
+    * its predecessor's loaded entry and costs nothing, and a driver-local
+    * table needs no fill (see [[pinned]]). Each remaining
     * table is filled by one `noop` write of the cached frame (a scan
     * without the shuffle a `count()` adds), and those writes run at once,
     * one thread per table (see [[graft.Parallel]]). Concurrent fills of
@@ -59,14 +66,21 @@ final case class ArxivStore(
     * cached partition once.
     */
   def materialize(): ArxivStore = {
-    Parallel.map(all.filterNot(loaded), all.size)(
+    Parallel.map(all.filterNot(pinned), all.size)(
       _.write.format("noop").mode("overwrite").save())
     this
   }
 
-  private def loaded(df: DataFrame): Boolean =
-    df.sparkSession.sharedState.cacheManager.lookupCachedData(df)
-      .exists(_.cachedRepresentation.cacheBuilder.isCachedColumnBuffersLoaded)
+  /** Whether `table` has nothing left to compute: its cache is loaded, or
+    * it is driver-local (see [[cached]]).
+    */
+  private def pinned(table: DataFrame): Boolean =
+    table.sparkSession.sharedState.cacheManager.lookupCachedData(table)
+      .exists(_.cachedRepresentation.cacheBuilder.isCachedColumnBuffersLoaded) ||
+      driverLocal(table)
+
+  private def driverLocal(table: DataFrame): Boolean =
+    Relational.localRows(table).isDefined
 
   /** Release this store's cached tables (safe only after successors are
     * materialized — see [[materialize]]).
@@ -112,10 +126,13 @@ final case class ArxivStore(
 }
 
 object ArxivStore {
-  /** All-empty store (the freshly-created database). */
+  /** All-empty store (the freshly-created database): empty local
+    * relations, which Catalyst prunes from unions and anti-joins and
+    * whose max ids are read without a job.
+    */
   def empty(spark: SparkSession): ArxivStore = {
     def e(s: StructType): DataFrame =
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], s)
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), s)
     ArxivStore(
       publications = e(Schemas.publications),
       citations = e(Schemas.citations),

@@ -33,7 +33,7 @@ object Citations {
       concat(lpad(col("publication_id").cast("string"), 10, "0"),
         lpad(col("result_idx").cast("string"), 10, "0")))
     val withIds = Relational.allocateIds(ordered, "__ord",
-        Ingest.maxLong(store.citations, "id"))
+        Relational.maxId(store.citations))
       .select(col("id"), col("publication_id"), col("title"), col("author"), col("year"))
 
     store.copy(citations = store.citations.unionByName(withIds))

@@ -148,13 +148,12 @@ object Enrich {
     val pubs = store.publications
     val matchedTitles = pubs.select(col("title"))
     val inserts = delta.join(matchedTitles, delta("new_title") === matchedTitles("title"), "left_anti")
-    val maxId = Ingest.maxLong(pubs, "id")
     val insertOrder = inserts
       .withColumn("__ord",
         concat(lpad(col("cat_id").cast("string"), 10, "0"),
           lpad(col("pub_id").cast("string"), 10, "0"),
           lpad(col("result_idx").cast("string"), 10, "0")))
-    val insertedPubs = Relational.allocateIds(insertOrder, "__ord", maxId)
+    val insertedPubs = Relational.allocateIds(insertOrder, "__ord", Relational.maxId(pubs))
       .select((col("id") +: pubs.columns.filter(_ != "id").map {
         case "submitter"    => col("first_author").as("submitter")
         case "title"        => col("new_title").as("title")
@@ -205,11 +204,7 @@ object Enrich {
     // -- categories of the SOURCE paper attach to the upserted publication
     val newCatNames = resultsWithId
       .select(explode(split(col("categories_str"), " ")).as("name"))
-    val categories = Relational.upsertDim(
-      store.categories.withColumnRenamed("category_name", "name"),
-      newCatNames, "name")
-      .withColumnRenamed("name", "category_name")
-      .select(Schemas.categories.fieldNames.map(col).toSeq: _*)
+    val categories = Ingest.upsertCategoryDim(store.categories, newCatNames)
 
     val publicationCategory = store.publicationCategory.unionByName(
       resultsWithId.select(col("publication_id"),

@@ -21,8 +21,12 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *  - the reference's N+1 row-at-a-time `get_or_insert_*` loops become
   *    explode + distinct + dense-id allocation + key joins (Catalyst
   *    broadcasts the dim side while it is small; no forced hint, since
-  *    dims grow with the corpus): constant number of shuffles regardless
-  *    of row count.
+  *    dims grow with the corpus): a constant number of shuffles regardless
+  *    of row count. A batch whose new rows fit
+  *    [[Relational.DriverIdBudget]] is numbered on the driver in one job
+  *    per allocation and comes back as a local relation, so the bridges
+  *    and dims built from it broadcast it without further jobs; a larger
+  *    batch takes the distributed sort.
   */
 object Ingest {
 
@@ -74,12 +78,13 @@ object Ingest {
     }
 
     // -- A3: SERIAL ids continue after the current max, in file order.
-    // newPubs feeds five outputs — cache so the dedup + anti-join + global
-    // sort + zipWithIndex chain runs once, not per consumer
-    val maxId = maxLong(store.publications, "id")
-    val newPubs = Relational.allocateIds(fresh, "input_idx", maxId)
-      .withColumn("update_date", clock)
-      .cache()
+    // newPubs feeds five outputs: the distributed path's rows are cached
+    // so the dedup + anti-join + global sort + zipWithIndex chain runs
+    // once, not per consumer (the driver path's are a local relation)
+    val numbered = Relational.allocateIds(fresh.withColumn("update_date", clock),
+      "input_idx", Relational.maxId(store.publications))
+    val newPubs =
+      if (Relational.localRows(numbered).isDefined) numbered else numbered.cache()
 
     val publications = store.publications.unionByName(
       newPubs.select(Schemas.publications.fieldNames.map(col).toSeq: _*))
@@ -90,12 +95,8 @@ object Ingest {
     val authors = upsertAuthorDim(store.authors, authorNames)
 
     val categoryNames = newPubs.select(
-      explode(split(col("categories"), " ")).as("category_name"))
-    val categories = Relational.upsertDim(
-      store.categories.withColumnRenamed("category_name", "name"),
-      categoryNames.withColumnRenamed("category_name", "name"), "name")
-      .withColumnRenamed("name", "category_name")
-      .select(Schemas.categories.fieldNames.map(col).toSeq: _*)
+      explode(split(col("categories"), " ")).as("name"))
+    val categories = upsertCategoryDim(store.categories, categoryNames)
 
     // -- A4 bridges: resolve surrogate keys via key joins (auto-broadcast
     //    while dims are small), dedup on the composite PK
@@ -132,6 +133,9 @@ object Ingest {
         coalesce(col("affiliation"), lit("Unknown")).as("affiliation"))
   }
 
-  private[arxiv] def maxLong(df: DataFrame, c: String): Long =
-    df.agg(coalesce(max(col(c)), lit(0L))).head().getLong(0)
+  /** Categories dim upsert of `names` (a `name` column). */
+  private[arxiv] def upsertCategoryDim(dim: DataFrame, names: DataFrame): DataFrame =
+    Relational.upsertDim(dim.withColumnRenamed("category_name", "name"), names, "name")
+      .withColumnRenamed("name", "category_name")
+      .select(Schemas.categories.fieldNames.map(col).toSeq: _*)
 }

@@ -1034,9 +1034,9 @@ object Bpe {
     * assignment must be deterministic across engines and runs.
     *
     *   - ids: dense 0..V−1 over the DISTINCT subword vocabulary in
-    *     UTF-8 binary order, allocated with the
-    *     [[Relational.allocateIds]] two-pass sort (no single-partition
-    *     window);
+    *     UTF-8 binary order, allocated by [[Relational.allocateIds]]
+    *     (numbered on the driver within its byte budget, else the
+    *     two-pass sort; never a single-partition window);
     *   - the segmentation work stays vocabulary-sized ([[segmentVocab]]);
     *     the corpus only tokenizes, joins its words to their subword
     *     arrays, and positions subwords with a per-document running

@@ -1196,7 +1196,9 @@ object Dedup {
         val (ra, rb) = (find(row.getLong(0)), find(row.getLong(1)))
         if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
       }
-      val mapping = parent.keys.map(x => (x, find(x))).toSeq
+      // a snapshot of the keys: find's path compression writes into
+      // parent, and a write can grow the table under a live key iterator
+      val mapping = parent.keys.toVector.map(x => (x, find(x)))
       norm.unpersist(blocking = false)
       val spark = nodes.sparkSession
       import spark.implicits._

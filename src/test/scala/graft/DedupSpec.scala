@@ -127,6 +127,25 @@ class DedupSpec extends SparkSpec {
     assert(fast == iter)
   }
 
+  test("connectedComponents: union-find labels every node at the hash table's resize counts") {
+    // the driver path maps each attached node through find(), whose path
+    // compression writes into the parent table; with 11 or 23 attached
+    // nodes (one below a resize point of a 16- or 32-slot table) that
+    // write grows the table under the key iterator. Disjoint pairs attach
+    // one node each and a 4-node chain three.
+    for (attached <- Seq(11, 23)) {
+      val pairs = (1 to attached - 3).map(i => (10L * i, 10L * i + 1)) ++
+        Seq((1000L, 1001L), (1001L, 1002L), (1002L, 1003L))
+      val nodes = pairs.flatMap(p => Seq(p._1, p._2)).distinct.toDF("id")
+      val edges = pairs.toDF("id_a", "id_b")
+      val fast = Dedup.connectedComponents(nodes, "id", edges)
+        .as[(Long, Long)].collect().toMap
+      val iter = Dedup.connectedComponents(nodes, "id", edges, driverEdgeBudget = 0L)
+        .as[(Long, Long)].collect().toMap
+      assert(fast == iter, s"$attached attached nodes")
+    }
+  }
+
   test("connectedComponents rejects non-integral id columns loudly") {
     // a string id would cast to null, drop every edge, and silently return
     // all-singletons — the operator must fail instead

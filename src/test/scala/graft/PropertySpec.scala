@@ -1,6 +1,8 @@
 package graft
 
 import graft.operators.Relational
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -97,6 +99,22 @@ class PropertySpec extends SparkSpec {
         assert(ids.toSeq == (start + 1 to start + names.distinct.size))
         val again = Relational.allocateIds(df, "name", start)
         assert(out.orderBy("id").collect().toSeq == again.orderBy("id").collect().toSeq)
+    }
+  }
+
+  test("allocateIds: the driver path numbers like the distributed sort") {
+    // glyphs whose UTF-16 and UTF-8 orders disagree (a surrogate pair vs
+    // U+FF21), plus a null key, which sorts first
+    val glyph = Gen.oneOf("a", "Z", "é", "Ａ", "𝒜", "0")
+    val name = Gen.frequency(1 -> Gen.const(Option.empty[String]),
+      8 -> Gen.listOf(glyph).map(g => Option(g.take(4).mkString)))
+    forAll2(Gen.listOf(name), Gen.choose(0L, 1000L)) { (names, start) =>
+      val df = names.distinct.toDF("name")
+      val fast = Relational.allocateIds(df, "name", start)
+      val dist = Relational.allocateIds(df, "name", start, driverBudget = 0L)
+      assert(fast.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+      assert(!dist.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+      assert(fast.orderBy("id").collect().toSeq == dist.orderBy("id").collect().toSeq)
     }
   }
 

@@ -1,6 +1,11 @@
 package graft
 
 import graft.operators.{AuditDiff, Constraints, Relational}
+import org.apache.spark.graft.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.functions._
 
 class RelationalSpec extends SparkSpec {
@@ -49,10 +54,117 @@ class RelationalSpec extends SparkSpec {
     assert(out == Seq((1L, Some("k")), (3L, None), (4L, None), (5L, Some("j"))))
   }
 
+  /** Whether `df` plans to a rows-in-the-plan local relation (the
+    * driver path's result) rather than a distributed scan.
+    */
+  private def local(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+
+  /** Runs `action` and returns what it launched: the number of jobs and
+    * the bytes its tasks sent back to the driver, read after the listener
+    * bus is drained.
+    */
+  private def traffic(action: => Unit): (Int, Long) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val bytes = new java.util.concurrent.atomic.AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => bytes.addAndGet(m.resultSize))
+    }
+    ListenerBusDrain.drain(sc)
+    sc.addSparkListener(listener)
+    try { action; ListenerBusDrain.drain(sc) }
+    finally sc.removeSparkListener(listener)
+    (jobs.get, bytes.get)
+  }
+
   test("allocateIds: dense, ordered, starting after max") {
     val out = Relational.allocateIds(Seq("c", "a", "b").toDF("name"), "name", 100L)
       .as[(Long, String)].collect().toSeq.sorted
     assert(out == Seq((101L, "a"), (102L, "b"), (103L, "c")))
+  }
+
+  test("allocateIds: the driver path equals the distributed path (budget 0)") {
+    def ids(df: DataFrame) =
+      df.as[(Long, Option[String])].collect().toSeq.sortBy(_._1)
+    val cases = Seq(
+      ("startAfter > 0", Seq(Option("c"), Option("a"), Option("b")), 100L,
+        Seq(101L -> "a", 102L -> "b", 103L -> "c")),
+      ("empty input", Seq.empty[Option[String]], 7L, Nil),
+      ("a null key sorts first", Seq(Option("b"), None, Option("a")), 0L,
+        Seq(1L -> null, 2L -> "a", 3L -> "b")),
+      // UTF-8 byte order: U+FF21 (EF BC A1) before U+1D49C (F0 9D 92 9C);
+      // String.compareTo puts the surrogate pair (D835 DC9C) first
+      ("UTF-8 order, not UTF-16", Seq(Option("𝒜"), Option("Ａ"), Option("z")), 0L,
+        Seq(1L -> "z", 2L -> "Ａ", 3L -> "𝒜")))
+    for ((label, names, start, want) <- cases) {
+      val df = names.toDF("name")
+      val fast = Relational.allocateIds(df, "name", start)
+      val dist = Relational.allocateIds(df, "name", start, driverBudget = 0L)
+      val over = Relational.allocateIds(df, "name", start, driverBudget = 1L)
+      assert(local(fast) && !local(dist), label)
+      assert(ids(fast) == want.map { case (i, n) => (i, Option(n)) }, label)
+      assert(ids(dist) == ids(fast), label)
+      // over a 1-byte budget the probe gives up and the distributed path
+      // numbers
+      if (names.nonEmpty) assert(!local(over) && ids(over) == ids(fast), label)
+    }
+  }
+
+  test("allocateIds: the probe returns at most its byte budget, whatever the partition count") {
+    // 8 partitions × 200 rows × ~2 KB = ~3.2 MB against a 256 KiB budget:
+    // every task passes its share and ships only its size, so the call
+    // falls back; what returns to the driver is the tasks' metrics and
+    // the fallback's range-sort sample of the small key
+    val df = spark.range(0, 1600, 1, 8)
+      .select((($"id" * 7919) % 1600).as("k"), repeat(lit("x"), 2000).as("payload"))
+    val budget = 256L << 10
+    var over: DataFrame = null
+    val (_, returned) = traffic {
+      over = Relational.allocateIds(df, "k", 0L, driverBudget = budget)
+    }
+    assert(!local(over))
+    assert(returned < budget + 32 * (16L << 10), s"$returned bytes returned")
+    val dist = Relational.allocateIds(df, "k", 0L, driverBudget = 0L)
+    def ids(d: DataFrame) = d.select("id", "k").as[(Long, Long)].collect().toSeq.sorted
+    val want = ids(dist)
+    assert(want == (0L until 1600L).map(k => (k + 1, k)))
+    assert(ids(over) == want)
+    // within budget the same rows come back as a local relation
+    val fits = Relational.allocateIds(df, "k", 0L, driverBudget = 64L << 20)
+    assert(local(fits) && ids(fits) == want)
+  }
+
+  test("allocateIds: an uneven split within budget is fetched in a second job") {
+    // partition 0 holds 100 rows of ~1 KB, the seven others one row each:
+    // partition 0 passes its eighth of the 256 KiB budget, the total fits
+    val df = spark.range(0, 800, 1, 8)
+      .filter($"id" < 100 || $"id" % 100 === 0)
+      .select($"id".as("k"), repeat(lit("y"), 1000).as("payload"))
+    val budget = 256L << 10
+    var fast: DataFrame = null
+    val (jobs, returned) = traffic {
+      fast = Relational.allocateIds(df, "k", 10L, driverBudget = budget)
+    }
+    assert(local(fast))
+    assert(jobs == 2, s"$jobs jobs")
+    assert(returned < budget + 16 * (16L << 10), s"$returned bytes returned")
+    val want = Relational.allocateIds(df, "k", 10L, driverBudget = 0L)
+    def ids(d: DataFrame) = d.select("id", "k").as[(Long, Long)].collect().toSeq.sorted
+    assert(ids(fast) == ids(want))
+    assert(ids(fast).map(_._1) == (11L to 117L))
+  }
+
+  test("maxId: a local relation is read on the driver, equal to the aggregate") {
+    val rows = Seq(Option(3L), None, Option(9L), Option(4L)).toDF("id")
+    val (jobs, _) = traffic(assert(Relational.maxId(rows) == 9L))
+    assert(jobs == 0)
+    assert(Relational.maxId(rows.repartition(2)) == 9L)
+    val empty = rows.filter($"id" > 100L)
+    assert(traffic(assert(Relational.maxId(empty) == 0L))._1 == 0)
+    assert(Relational.maxId(empty.repartition(2)) == 0L)
   }
 
   test("upsertDim: only unseen names get new ids; existing rows unchanged") {
@@ -61,6 +173,8 @@ class RelationalSpec extends SparkSpec {
     val out = Relational.upsertDim(dim, incoming, "name")
       .as[(Long, String)].collect().toSeq.sorted
     assert(out == Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d")))
+    val dist = Relational.upsertDim(dim, incoming, "name", driverBudget = 0L)
+    assert(dist.as[(Long, String)].collect().toSeq.sorted == out)
   }
 
   test("upsertDim is idempotent") {

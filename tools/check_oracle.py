@@ -93,10 +93,12 @@ def main(sf_dir, out_dir):
                 order_d = sorted(range(len(d_cols)), key=lambda i: d_cols[i])
                 set_s = {tuple(norm_cell(r[i]) for i in order_s) for r in s_rows}
                 set_d = {tuple(norm_cell(r[i]) for i in order_d) for r in d_rows}
-                only_s = list(set_s - set_d)[:3]
-                only_d = list(set_d - set_s)[:3]
-                print(f"        only in spark: {only_s}")
-                print(f"        only in duck : {only_d}")
+                # count + smallest rows: stable across runs, unlike a
+                # set's iteration order (per-process string hash seed)
+                only_s = sorted(set_s - set_d)
+                only_d = sorted(set_d - set_s)
+                print(f"        only in spark: {len(only_s)} rows, first {only_s[:3]}")
+                print(f"        only in duck : {len(only_d)} rows, first {only_d[:3]}")
     print(f"\n{len(names) - failures}/{len(names)} queries match")
     return 1 if failures else 0
 
