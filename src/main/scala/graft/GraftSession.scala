@@ -37,6 +37,12 @@ object GraftSession {
       // perfbench run); Spark's default of 100 evicted them, so every
       // warm op recompiled all of them. 2000 holds both five times over.
       .config("spark.sql.codegen.cache.maxEntries", "2000")
+      // static: that cache is keyed on the compiling classloader as well
+      // as the code, and with isolation on each streaming query's cloned
+      // session compiles under its own artifact classloader, so every
+      // trigger recompiled classes the previous query had built. No
+      // session here adds jars or files at runtime.
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "127.0.0.1")
 

@@ -92,9 +92,10 @@ object Enrich {
     // Materialize ONCE: five downstream tables branch off this frame, and
     // without pinning each would re-run the side-effecting HTTP sweep —
     // with a live client that means N× quota and, worse, tables built
-    // from DIFFERENT response sets (dangling bridges).
+    // from DIFFERENT response sets (dangling bridges). A `noop` write
+    // fills the cache in one job, where `count()` adds a shuffle.
     val out = spark.createDataFrame(rows, schema).cache()
-    out.count()
+    out.write.format("noop").mode("overwrite").save()
     out
   }
 

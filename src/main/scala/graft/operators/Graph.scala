@@ -1,7 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Observation, Row}
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Iterative graph analytics over edge relations — the rank/centrality
   * side of the graph story whose connectivity side is the incremental
@@ -17,31 +22,27 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Pre-partition + sort a STATIC relation on `key` and pin it with
-    * `localCheckpoint`: the captured LogicalRDD preserves both the hash
-    * partitioning and the per-partition sort order, so every per-round
-    * sort-merge join/aggregation keyed on `key` streams this side with
-    * NO Exchange and NO Sort — only the small rank/label side moves
-    * each iteration. This is the distributed-iteration contract (pay
-    * one shuffle at pin time, zero per round); without it the edge
-    * relation re-exchanges every round and dominates at scale.
-    */
-  private def pinByKey(df: DataFrame, key: String): DataFrame =
-    df.repartition(col(key)).sortWithinPartitions(key).localCheckpoint()
-
-  /** [[pinByKey]] for a relation that still needs `dedupCols`-dedup:
-    * repartition FIRST, dedup after — hash(`key`) co-locates every
-    * duplicate group (key ∈ dedupCols, so HashPartitioning(key)
-    * satisfies ClusteredDistribution(dedupCols)), making the dedup
+  /** Pin a STATIC relation that still needs `dedupCols`-dedup with
+    * `localCheckpoint`, partitioned and sorted on `key`: repartition
+    * FIRST, dedup after — hash(`key`) co-locates every duplicate group
+    * (key ∈ dedupCols, so HashPartitioning(key) satisfies
+    * ClusteredDistribution(dedupCols)), making the dedup
     * partition-local. One shuffle buys dedup + pin together, where
     * `.distinct().repartition(key)` would pay two edge-sized ones.
+    *
+    * The pin computes the relation once and keeps each round's lineage
+    * one step deep. It does NOT make the rounds exchange-free: the
+    * checkpoint's LogicalRDD reports unknown partitioning (so does a
+    * cached relation), so every per-round join or aggregation keyed on
+    * `key` re-shuffles this side, unless AQE turns the join into a
+    * broadcast of the other side.
     */
   private def pinDedupByKey(df: DataFrame, key: String,
       dedupCols: Seq[String]): DataFrame =
     df.repartition(col(key)).dropDuplicates(dedupCols)
       .sortWithinPartitions(key).localCheckpoint()
 
-  /** [[pinByKey]] for an aggregation/distinct output ALREADY
+  /** [[pinDedupByKey]] for an aggregation/distinct output ALREADY
     * hash-partitioned on `key` (a groupBy/dropDuplicates keyed on it):
     * just sort and pin — a repartition here would be a redundant
     * key-identical exchange Spark does not elide.
@@ -210,37 +211,99 @@ object Graph {
     * integer division (x·S div max_x) — the classic power iteration
     * with max- instead of L2-normalization, chosen because it needs no
     * square root and keeps every intermediate an exact BIGINT both
-    * engines reproduce. The per-iteration max is ONE scalar collect
-    * (the bounded-driver-literal pattern); 4-6 iterations separate
-    * hubs from authorities on link-shaped graphs.
+    * engines reproduce. 4-6 iterations separate hubs from authorities
+    * on link-shaped graphs.
     *
-    * Scale shape per iteration: two edge-keyed join+aggregations (the
-    * PageRank step shape, twice) plus a scalar agg; ranks
-    * localCheckpoint per iteration to keep lineage flat.
+    * The deduplicated edges are pinned once and every half-round's edge
+    * pass (join + per-node sum) runs in Spark. Where the rank vectors
+    * live depends on the node count; both paths give the same integers:
+    *  - driver: the node ids fit `driverBudget` bytes (one bounded
+    *    collect, [[Relational.collectWithin]]). Hub and authority are
+    *    driver arrays; each half-round joins the edges with a broadcast
+    *    local relation of the nonzero ranks and collects the per-node
+    *    sums, and the driver fills absent nodes with 0, takes the max
+    *    and normalizes. At most three jobs a half-round; the result is a
+    *    local relation.
+    *  - distributed (over budget, or `driverBudget` ≤ 0): the ranks are
+    *    relations, each half-round's raw sums are pinned with
+    *    `localCheckpoint`, and the max is observed while the pin runs.
+    * The default budget is `spark.sql.autoBroadcastJoinThreshold`: the
+    * rank side is what each half-round's join broadcasts, and AQE
+    * broadcasts it under that bound on either path. The budget bounds
+    * the collected node ids (16 bytes each as `UnsafeRow`s); the rank
+    * side broadcast from them holds one more long a node. A threshold
+    * of -1 (broadcasts off) takes the distributed path.
     *
+    * @param edges (srcCol, dstCol) integral node ids, cast to BIGINT;
+    *              duplicate edges are collapsed and null ids drop out
     * @return (node, hub, auth) in [[HitsScale]] units (top node = S)
     */
-  def hits(edges: DataFrame, srcCol: String, dstCol: String,
-      iters: Int): DataFrame = {
+  def hits(edges: DataFrame, srcCol: String, dstCol: String, iters: Int,
+      driverBudget: Long = SQLConf.get.autoBroadcastJoinThreshold): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    // The auth step joins edges on src, the hub step on dst — pin one
-    // copy per key (2× static storage buys zero per-round edge
-    // movement; the only per-round Exchanges are the two aggregations'
-    // hash(dst)/hash(src), which move rank-sized rows, not edges).
-    val eBySrc = pinDedupByKey(edges.select(col(srcCol).as("src"),
-      col(dstCol).as("dst")), "src", Seq("src", "dst"))
-    val eByDst = pinByKey(eBySrc, "dst")
-    val nodes = pinAgged(eBySrc.select(col("src").as("node"))
-      .union(eBySrc.select(col("dst").as("node"))).distinct(), "node")
-    // Pin the RAW per-round aggregate FIRST, then read the max off the
-    // pin and normalize as a pure projection over it: the max collect
+    val e = pinDedupByKey(edges.select(col(srcCol).cast(LongType).as("src"),
+      col(dstCol).cast(LongType).as("dst")), "src", Seq("src", "dst"))
+    val nodes = e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct()
+    Relational.collectWithin(nodes.queryExecution.toRdd, nodes.schema,
+        driverBudget) match {
+      case Some(rows) =>
+        hitsOnDriver(e, rows.filterNot(_.isNullAt(0)).map(_.getLong(0)).sorted,
+          iters)
+      case None => hitsDistributed(e, pinAgged(nodes, "node"), iters)
+    }
+  }
+
+  /** [[hits]] with the ranks in driver arrays indexed like the sorted,
+    * distinct `nodes`.
+    */
+  private def hitsOnDriver(e: DataFrame, nodes: Array[Long],
+      iters: Int): DataFrame = {
+    val spark = e.sparkSession
+    def rel(cols: Seq[String], rows: Iterable[Row]): DataFrame =
+      spark.createDataFrame(rows.toSeq.asJava,
+        StructType(cols.map(StructField(_, LongType, nullable = false))))
+    // one half-round: Σ rank(key) over the edges key → other, per
+    // `other` node, max-normalized; zero ranks add nothing to a sum, so
+    // the broadcast side carries only the nonzero ones
+    def step(rank: Array[Long], key: String, other: String,
+        name: String): Array[Long] = {
+      val side = rel(Seq(key, "r"),
+        nodes.indices.filter(rank(_) != 0L).map(i => Row(nodes(i), rank(i))))
+      val raw = new Array[Long](nodes.length)
+      e.join(broadcast(side), Seq(key)).groupBy(col(other))
+        .agg(sum(col("r"))).collect()
+        .foreach { r =>
+          if (!r.isNullAt(0))
+            raw(java.util.Arrays.binarySearch(nodes, r.getLong(0))) = r.getLong(1)
+        }
+      val m = raw.maxOption.getOrElse(0L)
+      require(m > 0L, s"hits: degenerate graph, max $name = $m")
+      // multiplyExact throws on overflow, as Spark's ANSI `*` does
+      raw.map(x => Math.multiplyExact(x, HitsScale) / m)
+    }
+    var h = Array.fill(nodes.length)(HitsScale)
+    var a: Array[Long] = null
+    for (_ <- 1 to iters) {
+      a = step(h, "src", "dst", "auth")
+      h = step(a, "dst", "src", "hub")
+    }
+    rel(Seq("node", "hub", "auth"),
+      nodes.indices.map(i => Row(nodes(i), h(i), a(i))))
+  }
+
+  /** [[hits]] with the ranks as relations over the pinned `nodes`. */
+  private def hitsDistributed(e: DataFrame, nodes: DataFrame,
+      iters: Int): DataFrame = {
+    // Pin the RAW per-round aggregate and observe its max while the pin
+    // runs, then normalize as a pure projection over the pin: the max
     // and the next round's join consume ONE materialization of the
-    // expensive edge join+agg. (Normalize-then-pin re-executed the
-    // join+agg for the pin after the max's head() had already run it —
-    // the whole per-round edge pass paid twice, at any scale.)
+    // edge join+agg, and the max costs no job of its own.
     def maxNorm(raw: DataFrame, c: String): DataFrame = {
-      val pinned = raw.localCheckpoint()
-      val m = pinned.agg(max(col(c))).head().getLong(0)
+      val obs = Observation()
+      val pinned = raw.observe(obs, coalesce(max(col(c)), lit(0L)).as("m"))
+        .localCheckpoint()
+      val m = obs.get("m").asInstanceOf[Long]
       require(m > 0L, s"hits: degenerate graph, max $c = $m")
       pinned.select(col("node"),
         expr(s"($c * ${HitsScale}L) div ${m}L").as(c))
@@ -249,14 +312,14 @@ object Graph {
     var a: DataFrame = null
     for (_ <- 1 to iters) {
       a = maxNorm(nodes.join(
-          eBySrc.join(h.withColumnRenamed("node", "src"), Seq("src"))
+          e.join(h.withColumnRenamed("node", "src"), Seq("src"))
             .groupBy(col("dst").as("node"))
             .agg(sum(col("hub")).as("auth")),
           Seq("node"), "left")
         .select(col("node"), coalesce(col("auth"), lit(0L)).as("auth")),
         "auth")
       h = maxNorm(nodes.join(
-          eByDst.join(a.withColumnRenamed("node", "dst"), Seq("dst"))
+          e.join(a.withColumnRenamed("node", "dst"), Seq("dst"))
             .groupBy(col("src").as("node"))
             .agg(sum(col("auth")).as("hub")),
           Seq("node"), "left")

@@ -159,7 +159,7 @@ object Relational {
     * partition make). What returns to the driver stays within `budget`
     * whatever the input's size or partition count.
     */
-  private def collectWithin(rdd: RDD[InternalRow], schema: StructType,
+  private[graft] def collectWithin(rdd: RDD[InternalRow], schema: StructType,
       budget: Long): Option[Array[UnsafeRow]] = {
     val n = rdd.getNumPartitions
     if (budget <= 0) return None

@@ -1,11 +1,7 @@
 package graft
 
-import scala.jdk.CollectionConverters._
-
 import graft.arxiv._
-import org.apache.spark.graft.ListenerBusDrain
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
@@ -42,25 +38,6 @@ class ArxivStoreSpec extends SparkSpec {
   private def unloaded(s: ArxivStore): Set[String] =
     tables(s).collect { case (n, df) if !loaded(df) && !local(df) => n }.toSet
 
-  /** The jobs `action` launches, as the SQL execution id each ran under,
-    * read after the listener bus is drained.
-    */
-  private def jobsOf(action: => Unit): Seq[String] = {
-    val sc = spark.sparkContext
-    val execs = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        execs.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
-          .getOrElse("none"))
-    }
-    ListenerBusDrain.drain(sc)
-    sc.addSparkListener(listener)
-    try { action; ListenerBusDrain.drain(sc) }
-    finally sc.removeSparkListener(listener)
-    execs.asScala.toSeq
-  }
-
   private def ingested(): ArxivStore =
     Ingest.run(spark, ArxivStore.empty(spark), fixture, clock)
       .cached().materialize()
@@ -78,7 +55,7 @@ class ArxivStoreSpec extends SparkSpec {
         s2 = Citations.run(spark, s1, new MockScholarClient()).cached().materialize()
       }
       assert(ingestJobs.size <= 16, s"ingest jobs by SQL execution: $ingestJobs")
-      assert(citationJobs.size <= 4, s"citations jobs by SQL execution: $citationJobs")
+      assert(citationJobs.size <= 2, s"citations jobs by SQL execution: $citationJobs")
     } finally Seq(s2, s1, s0).filter(_ != null).foreach(_.unpersist())
   }
 

@@ -438,6 +438,45 @@ class DocumentStreamsSpec extends SparkSpec {
     assert(b1After == b1Before && b1Before.nonEmpty)
   }
 
+  test("a second committed winnow stream over the same drops compiles no new classes") {
+    import graft.operators.{CompactionPolicy, Dedup}
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def mkDocs(rows: Seq[(Long, String)]) =
+      rows.map { case (id, tx) => (id, tx, "en", "syn", tx.length.toLong) }
+        .toDF("doc_id", "text", "lang", "source", "n_chars")
+    def body(i: Int) = s"unique corpus narrative number $i about spark engines " +
+      s"and data curation with several shared words in sequence $i"
+    val corpus = mkDocs((0 until 20).map(i => (i.toLong, body(i))))
+    val drops = Seq(
+      mkDocs((100 until 104).map(i => (i.toLong, s"fresh drop story $i with its own vocabulary $i")) :+
+        ((1000L, body(3).replace("narrative", "account")))),
+      mkDocs((200 until 203).map(i => (i.toLong, s"later drop chronicle $i carrying other tokens $i"))))
+    // each streaming query runs on a cloned session; the generated code
+    // of one query's triggers must serve the next query's
+    def ingest(): Unit = {
+      val base = java.nio.file.Files.createTempDirectory("winnow_cstream").toString
+      val landing = s"$base/landing"; new java.io.File(landing).mkdirs()
+      val idxDir = s"$base/winnow"
+      Dedup.saveWinnowIndexCommitted(
+        Dedup.buildWinnowIndex(corpus, "doc_id", "text"), idxDir)
+      val q = DocumentStreams.winnowIngestCommitted(spark, landing, idxDir,
+        s"$base/ckpt", CompactionPolicy(maxRuns = 2), maxFilesPerTrigger = Some(1))
+      try for ((d, i) <- drops.zipWithIndex) {
+        val tmp = s"$base/stage$i"
+        d.coalesce(1).write.parquet(tmp)
+        val part = new java.io.File(tmp).listFiles().map(_.toString)
+          .filter(_.endsWith(".parquet")).head
+        java.nio.file.Files.copy(java.nio.file.Paths.get(part),
+          java.nio.file.Paths.get(f"$landing/drop_$i%02d.parquet"))
+        q.processAllAvailable()
+      } finally q.stop()
+    }
+    ingest()
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    ingest()
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiled)
+  }
+
   test("label ingest stream equals the batch lifecycle and replays idempotently") {
     import graft.operators.Dedup
     val docs = Tables(spark, sf, "documents")

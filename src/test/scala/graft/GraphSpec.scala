@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.Graph
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 /** Fixed-point PageRank: known-graph values, symmetry, mass bounds,
@@ -87,6 +88,40 @@ class GraphSpec extends SparkSpec {
         "src", "dst", 4)
       .as[(Long, Long, Long)].collect().toSet
     assert(a == b && a.nonEmpty)
+  }
+
+  test("hits: the driver path equals the distributed path (budget 0)") {
+    val rnd = new scala.util.Random(17)
+    def inCore() = 1L + rnd.nextInt(40)
+    // a random core over 1..40 (duplicates and self-loops included), pure
+    // sources 100..104 citing into it, pure sinks 200..204 cited from
+    // it, and an isolated pair 300 → 301
+    val random = Seq.fill(150)((inCore(), inCore())) ++
+      (100L to 104L).flatMap(s => Seq.fill(3)((s, inCore()))) ++
+      (200L to 204L).flatMap(t => Seq.fill(2)((inCore(), t))) :+ ((300L, 301L))
+    val graphs = Seq(
+      Seq((1L, 3L), (2L, 3L), (1L, 4L)),
+      (1L to 30L).map(i => (i, (i * 3) % 30 + 31)),
+      random)
+    for (g <- graphs) {
+      val onDriver = Graph.hits(g.toDF("src", "dst"), "src", "dst", 4)
+      assert(onDriver.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
+        "a small graph takes the driver path")
+      val distributed = Graph.hits(g.toDF("src", "dst"), "src", "dst", 4,
+          driverBudget = 0L)
+        .as[(Long, Long, Long)].collect().toSet
+      assert(onDriver.as[(Long, Long, Long)].collect().toSet == distributed)
+      assert(distributed.map(_._1) == g.flatMap(e => Seq(e._1, e._2)).toSet)
+    }
+  }
+
+  test("hits on the driver: at most three jobs a half-round") {
+    // the distributed rounds ran about nine (AQE stages, the checkpoint
+    // and the max) per half-round
+    val edges = (1L to 30L).map(i => (i, (i * 3) % 30 + 31)).toDF("src", "dst")
+    val iters = 4
+    val jobs = jobsOf(Graph.hits(edges, "src", "dst", iters).collect())
+    assert(jobs.size <= 3 * 2 * iters + 6, s"jobs by SQL execution: $jobs")
   }
 
   test("bfsHops: exact hop distances on a path graph, min over multiple seeds") {

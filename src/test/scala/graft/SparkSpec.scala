@@ -1,5 +1,9 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.graft.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -29,5 +33,24 @@ trait SparkSpec extends AnyFunSuite {
     dirs.flatMap(d => walk(new java.io.File(d)))
       .filter(_.getName.endsWith(".parquet"))
       .map(f => f.getPath -> f.lastModified()).toMap
+  }
+
+  /** The jobs `action` launches, as the SQL execution id each ran under,
+    * read after the listener bus is drained.
+    */
+  def jobsOf(action: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val execs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        execs.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .getOrElse("none"))
+    }
+    ListenerBusDrain.drain(sc)
+    sc.addSparkListener(listener)
+    try { action; ListenerBusDrain.drain(sc) }
+    finally sc.removeSparkListener(listener)
+    execs.asScala.toSeq
   }
 }
