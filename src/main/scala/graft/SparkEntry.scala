@@ -3089,10 +3089,10 @@ object SparkEntry {
     // HITS hubs & authorities over the DIRECTED customer→supplier
     // trade graph — the bipartite reading where buyers are pure hubs
     // and suppliers pure authorities (Kleinberg's shape). 4 fixed-point
-    // iterations, max-normalized by integer division; the ranks and
-    // their per-round max are held on the driver between half-rounds
-    // (the graph fits the broadcast bound), and the oracle recomputes
-    // the max as a scalar subquery — identical integers.
+    // iterations, max-normalized by integer division; the deduplicated
+    // edges fit the broadcast bound, so they are collected once and
+    // every round runs on the driver, and the oracle recomputes the max
+    // as a scalar subquery — identical integers.
     "q197_hits" -> ((s, dir) => {
       val fwd = t(s, dir, "orders")
         .join(t(s, dir, "lineitem"),

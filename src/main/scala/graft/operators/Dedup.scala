@@ -2,7 +2,10 @@ package graft.operators
 
 import graft.functions.TextAnalysis
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Document deduplication for large-scale training-data pipelines: exact
   * (hash groupBy), MinHash+LSH banding, SimHash hamming, and exact n-gram
@@ -1124,7 +1127,7 @@ object Dedup {
     // id would cast to null, silently drop every edge, and return each doc
     // as its own singleton — fail loudly instead.
     def requireIntegral(df: DataFrame, c: String): Unit = {
-      import org.apache.spark.sql.types._
+      import org.apache.spark.sql.types.{ByteType, IntegerType, ShortType}
       val dt = df.schema(c).dataType
       require(Seq(ByteType, ShortType, IntegerType, LongType).contains(dt),
         s"connectedComponents needs an integral id column; '$c' is $dt " +
@@ -1881,18 +1884,18 @@ object Dedup {
       appendWinnowIndex(spark, dir, batch, idCol, textCol)
     }
 
-  /** [[appendWinnowIndexCommitted]] made EXACTLY-ONCE for a replayable
-    * writer (foreachBatch): `batchId` rides the manifest commit as a
-    * ledger header; a re-delivered id writes nothing and returns None
-    * ([[StoreFiles.commitAppendIdempotent]] — the ledger survives
-    * [[StoreFamily.compactL0]]'s re-base).
+  /** Append rows already winnowed with the index's own (k, w) — the
+    * (id, fp_pos, fp) rows of [[buildWinnowIndex]] — EXACTLY-ONCE for a
+    * replayable writer (foreachBatch): `batchId` rides the manifest
+    * commit as a ledger header; a re-delivered id writes nothing and
+    * returns None ([[StoreFiles.commitAppendIdempotent]] — the ledger
+    * survives [[StoreFamily.compactL0]]'s re-base).
     */
-  def appendWinnowIndexCommittedIdempotent(
+  def appendWinnowFpsCommittedIdempotent(
       spark: org.apache.spark.sql.SparkSession, dir: String,
-      batch: DataFrame, idCol: String, textCol: String,
-      batchId: Long): Option[Long] =
+      fps: DataFrame, batchId: Long): Option[Long] =
     Stores.winnow.appendCommittedIdempotent(spark, dir, batchId) {
-      appendWinnowIndex(spark, dir, batch, idCol, textCol)
+      fps.write.mode("append").parquet(s"$dir/fps")
     }
 
   /** Assemble a [[WinnowIndex]] under a per-sub reader (raw or
@@ -1948,26 +1951,84 @@ object Dedup {
     * its whole posting list (the quadratic-bucket guard; same role as
     * the hot-gram caps elsewhere). The winnowing guarantee (a shared
     * run of ≥ w + k − 1 tokens shares a fingerprint) holds for any
-    * run that is not itself df-capped boilerplate.
-    *
-    * Scale shape: one df aggregate over the index, one keyed join on
-    * the fingerprint (fan-out bounded by maxDf per fp), one pair
-    * aggregate. The corpus text is never re-read.
+    * run that is not itself df-capped boilerplate. The batch is
+    * fingerprinted with the index's (k, w), then [[winnowProbeFps]].
     */
   def winnowProbe(index: WinnowIndex, batch: DataFrame, idCol: String,
-      textCol: String, minShared: Long = 2L, maxDf: Long = 50L): DataFrame = {
+      textCol: String, minShared: Long = 2L, maxDf: Long = 50L): DataFrame =
+    winnowProbeFps(index,
+      graft.operators.Curation
+        .winnowFingerprints(batch, idCol, textCol, index.k, index.w)
+        .select(col(idCol).as("id_b"), col("fp")),
+      minShared, maxDf)
+
+  /** [[winnowProbe]] of a batch already winnowed with the index's (k, w):
+    * `batchFps` holds its (id_b, fp) rows, duplicates allowed.
+    *
+    * Scale shape, one budget over two sides: the bytes of collected rows
+    * ([[Relational.driverRows]]) may not pass
+    * `spark.sql.autoBroadcastJoinThreshold`, read at call time.
+    *  - driver: the batch's rows fit (read without a job when `batchFps`
+    *    is a local relation), and so do the index's (id, fp) rows whose
+    *    fp occurs in the batch, collected through an IN filter on the
+    *    batch's distinct fps (an InSet past a few values, so no broadcast
+    *    job; its length is bounded by the budget). The driver counts each
+    *    fp's distinct index ids (its df over the whole index: every index
+    *    row of that fp was collected), drops the fps over `maxDf`, and
+    *    counts the shared fps per pair. A batch without fingerprints runs
+    *    no job; the pairs are a local relation.
+    *  - distributed (either side over budget, or a threshold ≤ 0): one
+    *    df aggregate over the index, one keyed join on the fingerprint
+    *    (fan-out bounded by maxDf per fp), one pair aggregate.
+    * The corpus text is never re-read.
+    */
+  def winnowProbeFps(index: WinnowIndex, batchFps: DataFrame,
+      minShared: Long = 2L, maxDf: Long = 50L): DataFrame = {
     require(minShared >= 1 && maxDf >= 1,
       s"need minShared >= 1, maxDf >= 1; got $minShared/$maxDf")
-    val idxFps = index.fps.select(col("id"), col("fp")).distinct()
-    val keep = idxFps.groupBy(col("fp")).agg(count(lit(1)).as("df"))
-      .filter(col("df") <= maxDf).select(col("fp"))
-    val bFps = graft.operators.Curation
-      .winnowFingerprints(batch, idCol, textCol, index.k, index.w)
-      .select(col(idCol).as("id_b"), col("fp")).distinct()
-    idxFps.join(keep, Seq("fp"))
-      .join(bFps, Seq("fp"))
-      .groupBy(col("id").as("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= minShared)
+    val budget = SQLConf.get.autoBroadcastJoinThreshold
+    val idxFps = index.fps.select(col("id"), col("fp"))
+    val bFps = batchFps.select(col("id_b"), col("fp"))
+    def distributed(b: DataFrame): DataFrame = {
+      val idx = idxFps.distinct()
+      val keep = idx.groupBy(col("fp")).agg(count(lit(1)).as("df"))
+        .filter(col("df") <= maxDf).select(col("fp"))
+      idx.join(keep, Seq("fp"))
+        .join(b.distinct(), Seq("fp"))
+        .groupBy(col("id").as("id_a"), col("id_b"))
+        .agg(count(lit(1)).as("n_shared"))
+        .filter(col("n_shared") >= minShared)
+    }
+    Relational.driverRows(bFps, budget) match {
+      case None => distributed(bFps)
+      case Some(bRows) =>
+        val Seq(idType, fpType) = idxFps.schema.map(_.dataType)
+        val bIdType = bFps.schema("id_b").dataType
+        // a null fp matches nothing
+        val batchIds = bRows.filterNot(_.isNullAt(1))
+          .groupMap(_.get(1, fpType))(_.get(0, bIdType))
+          .view.mapValues(_.distinct).toMap
+        val shared =
+          if (batchIds.isEmpty) Some(Seq.empty)
+          else Relational.driverRows(idxFps.filter(col("fp").isin(batchIds.keys.toSeq
+            .map(CatalystTypeConverters.convertToScala(_, fpType)): _*)), budget)
+        shared match {
+          case None =>
+            distributed(Relational.localFrame(bFps.sparkSession, bRows, bFps.schema))
+          case Some(iRows) =>
+            val nShared = scala.collection.mutable.HashMap.empty[(Any, Any), Long]
+            iRows.map(r => (r.get(1, fpType), r.get(0, idType))).distinct
+              .groupMap(_._1)(_._2)
+              .foreach { case (fp, ids) =>
+                if (ids.size <= maxDf)
+                  for (a <- ids; b <- batchIds(fp))
+                    nShared((a, b)) = nShared.getOrElse((a, b), 0L) + 1L
+              }
+            Relational.localFrame(bFps.sparkSession,
+              nShared.collect { case ((a, b), n) if n >= minShared => InternalRow(a, b, n) }.toSeq,
+              StructType(Seq(idxFps.schema("id").copy(name = "id_a"),
+                bFps.schema("id_b"), StructField("n_shared", LongType, nullable = false))))
+        }
+    }
   }
 }

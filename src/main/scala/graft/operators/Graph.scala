@@ -3,6 +3,7 @@ package graft.operators
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Observation, Row}
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
@@ -92,11 +93,12 @@ object Graph {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(dampBp >= 0 && dampBp <= 10000,
       s"dampBp must be in [0, 10000], got $dampBp")
-    // Static relations pinned ONCE on their per-round join key: the
-    // edge relation and out-degrees on src, the node universe on node.
-    // Per iteration the only Exchange left is the contribution
-    // aggregation's hash(dst) — the irreducible data movement of the
-    // power-iteration step (shares travel src-partitioning → dst-key).
+    // Static relations computed and pinned ONCE: the edge relation and
+    // out-degrees, the node universe. The pins keep each round's lineage
+    // one step deep but do not save its exchanges: a localCheckpoint
+    // reports unknown partitioning, so every round re-shuffles (or AQE
+    // broadcasts) the pinned sides it joins, besides the contribution
+    // aggregation's hash(dst).
     val e = pinDedupByKey(edges.select(col(srcCol).as("src"),
       col(dstCol).as("dst")), "src", Seq("src", "dst"))
     val nodes = pinAgged(e.select(col("src").as("node"))
@@ -105,8 +107,8 @@ object Graph {
     // (N, T) stats row
     val n = nodes.count()
     require(n > 0, "pageRank: empty graph")
-    // keyed "src" directly (not "node") so the groupBy rides e's pin
-    // exchange-free and the per-round join needs no rename
+    // keyed "src" directly (not "node") so the per-round join needs no
+    // rename
     val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("d"))
       .sortWithinPartitions("src").localCheckpoint()
     val base = ((10000L - dampBp) * (Scale / n)) / 10000L
@@ -137,9 +139,9 @@ object Graph {
     * PageRank with a low TrustRank is the classic link-spam shape) —
     * the graph-side sibling of the content-side quality gates.
     *
-    * Identical execution contract to [[pageRank]]: edges/out-degrees
-    * pinned once on src, nodes on node, one hash(dst) aggregation per
-    * round, floor-integer [[Scale]] arithmetic any engine replays.
+    * Identical execution contract to [[pageRank]]: edges, out-degrees
+    * and nodes pinned once, the same per-round joins and hash(dst)
+    * aggregation, floor-integer [[Scale]] arithmetic any engine replays.
     * Differences, both standard TrustRank: (a) r₀ = Scale/|S| on the
     * seeds and 0 elsewhere (the seed distribution, not uniform);
     * (b) the per-round teleport term is per-NODE — (1−d)·Scale/|S| on
@@ -214,25 +216,31 @@ object Graph {
     * engines reproduce. 4-6 iterations separate hubs from authorities
     * on link-shaped graphs.
     *
-    * The deduplicated edges are pinned once and every half-round's edge
-    * pass (join + per-node sum) runs in Spark. Where the rank vectors
-    * live depends on the node count; both paths give the same integers:
-    *  - driver: the node ids fit `driverBudget` bytes (one bounded
-    *    collect, [[Relational.collectWithin]]). Hub and authority are
-    *    driver arrays; each half-round joins the edges with a broadcast
-    *    local relation of the nonzero ranks and collects the per-node
-    *    sums, and the driver fills absent nodes with 0, takes the max
-    *    and normalizes. At most three jobs a half-round; the result is a
+    * The deduplicated edges are pinned once. One budget, `driverBudget`
+    * bytes of collected rows ([[Relational.collectWithin]]), picks one of
+    * three tiers, tried in this order; all three give the same integers:
+    *  - edges: the pinned edges fit (24 bytes an edge as `UnsafeRow`s).
+    *    One collect, then every round runs on driver arrays: each edge is
+    *    indexed once into the sorted node ids, and a half-round is one
+    *    loop over the edges. No job after the collect; the result is a
     *    local relation.
-    *  - distributed (over budget, or `driverBudget` ≤ 0): the ranks are
+    *  - ranks: the edges do not fit but the node ids do (16 bytes a
+    *    node). Hub and authority are driver arrays; each half-round joins
+    *    the edges with a broadcast local relation of the nonzero ranks
+    *    and collects the per-node sums. At most three jobs a half-round;
+    *    the result is a local relation.
+    *  - distributed (neither fits, or `driverBudget` ≤ 0): the ranks are
     *    relations, each half-round's raw sums are pinned with
     *    `localCheckpoint`, and the max is observed while the pin runs.
+    * On the driver tiers the driver fills absent nodes with 0, takes the
+    * max and normalizes; sums use `Math.addExact` and the normalization
+    * `Math.multiplyExact`, which throw on overflow as Spark's ANSI `sum`
+    * and `*` do. The node set is every non-null endpoint; an edge with a
+    * null endpoint adds to no sum, as it joins nothing in Spark.
     * The default budget is `spark.sql.autoBroadcastJoinThreshold`: the
     * rank side is what each half-round's join broadcasts, and AQE
-    * broadcasts it under that bound on either path. The budget bounds
-    * the collected node ids (16 bytes each as `UnsafeRow`s); the rank
-    * side broadcast from them holds one more long a node. A threshold
-    * of -1 (broadcasts off) takes the distributed path.
+    * broadcasts it under that bound on the ranks and distributed tiers.
+    * A threshold of -1 (broadcasts off) takes the distributed tier.
     *
     * @param edges (srcCol, dstCol) integral node ids, cast to BIGINT;
     *              duplicate edges are collapsed and null ids drop out
@@ -243,33 +251,82 @@ object Graph {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     val e = pinDedupByKey(edges.select(col(srcCol).cast(LongType).as("src"),
       col(dstCol).cast(LongType).as("dst")), "src", Seq("src", "dst"))
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-    Relational.collectWithin(nodes.queryExecution.toRdd, nodes.schema,
-        driverBudget) match {
-      case Some(rows) =>
-        hitsOnDriver(e, rows.filterNot(_.isNullAt(0)).map(_.getLong(0)).sorted,
-          iters)
-      case None => hitsDistributed(e, pinAgged(nodes, "node"), iters)
+    Relational.collectWithin(e.queryExecution.toRdd, e.schema, driverBudget) match {
+      case Some(rows) => hitsOverEdges(e.sparkSession, rows, iters)
+      case None =>
+        val nodes = e.select(col("src").as("node"))
+          .union(e.select(col("dst").as("node"))).distinct()
+        Relational.collectWithin(nodes.queryExecution.toRdd, nodes.schema,
+            driverBudget) match {
+          case Some(rows) =>
+            hitsOnDriver(e, rows.filterNot(_.isNullAt(0)).map(_.getLong(0)).sorted,
+              iters)
+          case None => hitsDistributed(e, pinAgged(nodes, "node"), iters)
+        }
     }
   }
 
-  /** [[hits]] with the ranks in driver arrays indexed like the sorted,
-    * distinct `nodes`.
+  /** `iters` rounds with hub and authority in driver arrays indexed like
+    * the sorted, distinct `nodes`; `toAuth` and `toHub` give one
+    * half-round's raw sums from the other side's ranks, which the driver
+    * max-normalizes (`multiplyExact` throws on overflow, as Spark's ANSI
+    * `*` does). The result is a local relation.
+    */
+  private def driverRounds(spark: org.apache.spark.sql.SparkSession,
+      nodes: Array[Long], iters: Int)(toAuth: Array[Long] => Array[Long],
+      toHub: Array[Long] => Array[Long]): DataFrame = {
+    def maxNorm(raw: Array[Long], name: String): Array[Long] = {
+      val m = raw.maxOption.getOrElse(0L)
+      require(m > 0L, s"hits: degenerate graph, max $name = $m")
+      raw.map(x => Math.multiplyExact(x, HitsScale) / m)
+    }
+    var h = Array.fill(nodes.length)(HitsScale)
+    var a: Array[Long] = null
+    for (_ <- 1 to iters) {
+      a = maxNorm(toAuth(h), "auth")
+      h = maxNorm(toHub(a), "hub")
+    }
+    spark.createDataFrame(
+      nodes.indices.map(i => Row(nodes(i), h(i), a(i))).asJava,
+      StructType(Seq("node", "hub", "auth")
+        .map(StructField(_, LongType, nullable = false))))
+  }
+
+  /** [[hits]] on the collected (src, dst) `edges`: each half-round is one
+    * loop over the edges, summing with `addExact` (Spark's ANSI `sum`
+    * throws on overflow too).
+    */
+  private def hitsOverEdges(spark: org.apache.spark.sql.SparkSession,
+      edges: Array[UnsafeRow], iters: Int): DataFrame = {
+    val nodes = edges.iterator
+      .flatMap(r => Iterator(0, 1).filterNot(r.isNullAt).map(r.getLong))
+      .toArray.distinct.sorted
+    // the edges that carry rank, each endpoint indexed into `nodes` once
+    val whole = edges.filterNot(r => r.isNullAt(0) || r.isNullAt(1))
+    def at(c: Int) = whole.map(r => java.util.Arrays.binarySearch(nodes, r.getLong(c)))
+    val (src, dst) = (at(0), at(1))
+    def sums(rank: Array[Long], from: Array[Int], to: Array[Int]): Array[Long] = {
+      val raw = new Array[Long](nodes.length)
+      for (i <- from.indices)
+        raw(to(i)) = Math.addExact(raw(to(i)), rank(from(i)))
+      raw
+    }
+    driverRounds(spark, nodes, iters)(sums(_, src, dst), sums(_, dst, src))
+  }
+
+  /** [[hits]] with the ranks on the driver and each half-round's edge
+    * pass in Spark over the pinned `e`.
     */
   private def hitsOnDriver(e: DataFrame, nodes: Array[Long],
       iters: Int): DataFrame = {
     val spark = e.sparkSession
-    def rel(cols: Seq[String], rows: Iterable[Row]): DataFrame =
-      spark.createDataFrame(rows.toSeq.asJava,
-        StructType(cols.map(StructField(_, LongType, nullable = false))))
-    // one half-round: Σ rank(key) over the edges key → other, per
-    // `other` node, max-normalized; zero ranks add nothing to a sum, so
-    // the broadcast side carries only the nonzero ones
-    def step(rank: Array[Long], key: String, other: String,
-        name: String): Array[Long] = {
-      val side = rel(Seq(key, "r"),
-        nodes.indices.filter(rank(_) != 0L).map(i => Row(nodes(i), rank(i))))
+    // Σ rank(key) over the edges key → other, per `other` node; zero
+    // ranks add nothing to a sum, so the broadcast side carries only the
+    // nonzero ones
+    def sums(rank: Array[Long], key: String, other: String): Array[Long] = {
+      val side = spark.createDataFrame(
+        nodes.indices.filter(rank(_) != 0L).map(i => Row(nodes(i), rank(i))).asJava,
+        StructType(Seq(key, "r").map(StructField(_, LongType, nullable = false))))
       val raw = new Array[Long](nodes.length)
       e.join(broadcast(side), Seq(key)).groupBy(col(other))
         .agg(sum(col("r"))).collect()
@@ -277,19 +334,9 @@ object Graph {
           if (!r.isNullAt(0))
             raw(java.util.Arrays.binarySearch(nodes, r.getLong(0))) = r.getLong(1)
         }
-      val m = raw.maxOption.getOrElse(0L)
-      require(m > 0L, s"hits: degenerate graph, max $name = $m")
-      // multiplyExact throws on overflow, as Spark's ANSI `*` does
-      raw.map(x => Math.multiplyExact(x, HitsScale) / m)
+      raw
     }
-    var h = Array.fill(nodes.length)(HitsScale)
-    var a: Array[Long] = null
-    for (_ <- 1 to iters) {
-      a = step(h, "src", "dst", "auth")
-      h = step(a, "dst", "src", "hub")
-    }
-    rel(Seq("node", "hub", "auth"),
-      nodes.indices.map(i => Row(nodes(i), h(i), a(i))))
+    driverRounds(spark, nodes, iters)(sums(_, "src", "dst"), sums(_, "dst", "src"))
   }
 
   /** [[hits]] with the ranks as relations over the pinned `nodes`. */
@@ -341,11 +388,10 @@ object Graph {
   def bfsHops(edges: DataFrame, srcCol: String, dstCol: String,
       seeds: DataFrame, seedCol: String, maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    // edges pinned on src: each relaxation streams the edge side; the
-    // frontier (renamed node→src, partitioned hash(node) from the
-    // previous round's aggregation, alias-tracked to hash(src)) joins
-    // co-partitioned — the per-round Exchange is only the min-dist
-    // aggregation over frontier-sized rows.
+    // edges deduplicated and pinned once; each relaxation joins them
+    // with the frontier. The pin reports unknown partitioning, so every
+    // round re-shuffles the edge side (or AQE broadcasts the frontier)
+    // besides the min-dist aggregation over frontier-sized rows.
     val e = pinDedupByKey(edges.select(col(srcCol).as("src"),
       col(dstCol).as("dst")), "src", Seq("src", "dst"))
     var dist = seeds.select(col(seedCol).as("node")).distinct()
@@ -391,14 +437,11 @@ object Graph {
       k: Int, rounds: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    // The shrinking edge relation enters every round partitioned on
-    // src (pinned once up front, re-established below by the swap), so
-    // the degree aggregation AND the first semi join are exchange-free
-    // (keep is born hash(src), alias-tracked through its renames). The
-    // one per-round edge Exchange is the second semi's hash(dst) — and
-    // because the relation is SYMMETRIC, swapping (src,dst) afterwards
-    // is a set-identity that hands the next round a src-partitioned
-    // input for free: one edge exchange per round instead of two.
+    // The shrinking edge relation is pinned every round. The relation
+    // is SYMMETRIC, so swapping (src, dst) afterwards is a set-identity.
+    // A localCheckpoint reports unknown partitioning, so each round's
+    // degree aggregation and both semi joins re-shuffle the pinned
+    // edges (or AQE broadcasts the surviving node set).
     var e = pinDedupByKey(symmetrizeRaw(edges, aCol, bCol), "src",
       Seq("src", "dst"))
     for (_ <- 1 to rounds) {

@@ -174,6 +174,27 @@ object Relational {
     if (parts.forall(_.isRight)) Some(parts.flatMap(_.toOption.get)) else None
   }
 
+  /** `df`'s rows if they take at most `budget` bytes as `UnsafeRow`s,
+    * else None (always None when `budget` ≤ 0). A frame that plans to a
+    * local relation ([[localRows]]) is measured on the driver without a
+    * job; any other runs one bounded collect ([[collectWithin]]).
+    */
+  private[graft] def driverRows(df: DataFrame, budget: Long): Option[Seq[InternalRow]] =
+    if (budget <= 0) None
+    else localRows(df) match {
+      case Some(rows) =>
+        val toUnsafe = UnsafeProjection.create(df.schema)
+        Some(rows).filter(_.iterator.map(toUnsafe(_).getSizeInBytes.toLong).sum <= budget)
+      case None => collectWithin(df.queryExecution.toRdd, df.schema, budget).map(_.toSeq)
+    }
+
+  /** A local relation of `rows` under `schema`, nullability kept. */
+  private[graft] def localFrame(spark: org.apache.spark.sql.SparkSession,
+      rows: Seq[InternalRow], schema: StructType): DataFrame = {
+    val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+    spark.createDataFrame(rows.map(toRow(_).asInstanceOf[Row]).asJava, schema)
+  }
+
   /** One partition's rows as `UnsafeRow`s if they take at most `keep`
     * bytes; else Left of their size, counted until it passes `count`.
     */

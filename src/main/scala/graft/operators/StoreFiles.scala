@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Shared file-store maintenance plumbing for the persisted index
   * families. Appends are NEW-FILES-ONLY by design (never rewrite a
@@ -331,14 +332,19 @@ private[graft] object StoreFiles {
     * envelope, which is sound for range pruning: a BETWEEN predicate
     * cannot match null.
     */
-  private def footerBlocks(conf: org.apache.hadoop.conf.Configuration,
-      file: String): Seq[org.apache.parquet.hadoop.metadata.BlockMetaData] = {
-    import scala.jdk.CollectionConverters._
+  private def footer(conf: org.apache.hadoop.conf.Configuration,
+      file: String): org.apache.parquet.hadoop.metadata.ParquetMetadata = {
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
       org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
         new org.apache.hadoop.fs.Path(file), conf))
-    try reader.getFooter.getBlocks.asScala.toSeq
+    try reader.getFooter
     finally reader.close()
+  }
+
+  private def footerBlocks(conf: org.apache.hadoop.conf.Configuration,
+      file: String): Seq[org.apache.parquet.hadoop.metadata.BlockMetaData] = {
+    import scala.jdk.CollectionConverters._
+    footer(conf, file).getBlocks.asScala.toSeq
   }
 
   private def longStatsOfBlocks(
@@ -819,7 +825,11 @@ private[graft] object StoreFiles {
   /** Read one manifested subdirectory of a committed store as of a
     * generation: the committed files under `$dir/$sub` as one relation.
     * basePath keeps the subdirectory's partition columns (and their
-    * pruning) intact when reading explicit leaf files.
+    * pruning) intact when reading explicit leaf files. The data schema
+    * is the one Spark wrote into the first file's footer, read on the
+    * driver, so the read runs no schema-inference job; the partition
+    * columns are still inferred from the paths, after the data columns,
+    * as before. A file without that footer key is inferred as before.
     */
   def snapshotRead(spark: SparkSession, dir: String, sub: String,
       asOf: Option[Long] = None): DataFrame = {
@@ -828,8 +838,20 @@ private[graft] object StoreFiles {
     require(paths.nonEmpty,
       s"snapshotRead: no committed files under $dir/$sub" +
         asOf.fold("")(g => s" as of generation $g"))
-    spark.read.option("basePath", s"$dir/$sub").parquet(paths: _*)
+    val reader = spark.read.option("basePath", s"$dir/$sub")
+    footerSchema(spark.sparkContext.hadoopConfiguration, paths.head)
+      .fold(reader)(reader.schema).parquet(paths: _*)
   }
+
+  /** The Spark schema a Spark writer recorded in a parquet file's footer
+    * (the key schema inference reads first), or None without it.
+    */
+  private def footerSchema(conf: org.apache.hadoop.conf.Configuration,
+      file: String): Option[StructType] =
+    Option(footer(conf, file).getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata"))
+      .flatMap(j => scala.util.Try(DataType.fromJson(j)).toOption)
+      .collect { case s: StructType => s }
 
   /** Run a family's append under the commit protocol: data files land
     * first (`append`), then the before/after listing diff — exactly the

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 /** Streaming document curation — the training-data pipeline run
@@ -327,8 +328,9 @@ object DocumentStreams {
     * trigger probes the COMMITTED snapshot (base corpus ∪ earlier
     * admitted batches — the same sequential admission chain as
     * [[winnowIngest]]), APPENDS the admitted documents' fingerprints
-    * into the store itself under the batch-id ledger
-    * ([[graft.operators.Dedup.appendWinnowIndexCommittedIdempotent]]),
+    * into the store itself under the batch-id ledger (the admitted
+    * docs' share of the trigger's pinned fingerprints,
+    * [[graft.operators.Dedup.appendWinnowFpsCommittedIdempotent]]),
     * and lets the [[graft.operators.CompactionPolicy]] self-regulate
     * the L0 the stream grows. A re-delivered batch writes nothing:
     * the ledger rides the manifest commit and survives the re-base.
@@ -346,26 +348,46 @@ object DocumentStreams {
       .start()
 
   /** One [[winnowIngestCommitted]] trigger, exposed for the replay
-    * spec and the in-row idempotence pin.
+    * spec and the in-row idempotence pin. The rows the trigger holds on
+    * the driver, the batch's fingerprints and the probe's collects
+    * ([[graft.operators.Dedup.winnowProbeFps]]), are bounded by
+    * `spark.sql.autoBroadcastJoinThreshold`.
     */
   def winnowIngestCommittedBatch(spark: SparkSession, idxDir: String,
       policy: graft.operators.CompactionPolicy)(
       batch: DataFrame, batchId: Long): Unit = {
-    import graft.operators.{Dedup, StoreFiles, Stores}
+    import graft.operators.{Dedup, Relational, StoreFiles, Stores}
     // early ledger probe saves the replay even the gating jobs; the
     // authoritative check stays inside the idempotent append
     if (!StoreFiles.committedBatchIds(spark, idxDir).contains(batchId)) {
-      val pairs = Dedup.winnowProbe(
-        Dedup.loadWinnowIndexSnapshot(spark, idxDir),
-        batch, "doc_id", "text", minShared = 2L, maxDf = 50L)
-      // pairs are (id_a = index side, id_b = batch side) by contract.
-      // Pinned eagerly: the append must not READ the snapshot lazily
-      // while its own files land
-      val admitted = batch.join(
-          pairs.select(col("id_b").as("doc_id")).distinct(),
-          Seq("doc_id"), "left_anti").localCheckpoint()
-      Dedup.appendWinnowIndexCommittedIdempotent(spark, idxDir, admitted,
-        "doc_id", "text", batchId)
+      val index = Dedup.loadWinnowIndexSnapshot(spark, idxDir)
+      // Fingerprinted once and pinned eagerly (a local relation within
+      // the budget): the probe reads these rows, and the append writes
+      // the admitted docs' share of them, with the build's schema, so
+      // the append must not READ the snapshot lazily while its own
+      // files land
+      val built = Dedup.buildWinnowIndex(batch, "doc_id", "text", index.k, index.w).fps
+      val held = Relational.driverRows(built, SQLConf.get.autoBroadcastJoinThreshold)
+      val fps = held.fold(built.localCheckpoint())(
+        Relational.localFrame(spark, _, built.schema))
+      // pairs are (id_a = index side, id_b = batch side) by contract
+      val pairs = Dedup.winnowProbeFps(index,
+        fps.select(col("id").as("id_b"), col("fp")),
+        minShared = 2L, maxDf = 50L)
+      val admitted = (held, Relational.localRows(pairs)) match {
+        case (Some(rows), Some(dups)) =>
+          // a null id matches no pair, as in the anti join below
+          val idType = fps.schema("id").dataType
+          val dupIds = dups.map(_.get(1, idType)).toSet
+          // one file, as the distributed plan writes a small batch
+          Relational.localFrame(spark,
+            rows.filterNot(r => !r.isNullAt(0) && dupIds(r.get(0, idType))),
+            fps.schema).coalesce(1)
+        case _ =>
+          fps.join(pairs.select(col("id_b").as("id")).distinct(), Seq("id"), "left_anti")
+            .select(fps.columns.map(col): _*).localCheckpoint()
+      }
+      Dedup.appendWinnowFpsCommittedIdempotent(spark, idxDir, admitted, batchId)
     }
     // unconditional — including on replays, covering the crash window
     // between a batch's commit and its compaction

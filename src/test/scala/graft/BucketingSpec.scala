@@ -32,13 +32,4 @@ class BucketingSpec extends SparkSpec {
       spark.sql("DROP TABLE IF EXISTS b_lineitem")
     }
   }
-
-  private def withConf[T](kv: (String, String))(f: => T): T = {
-    val old = spark.conf.getOption(kv._1)
-    spark.conf.set(kv._1, kv._2)
-    try f finally old match {
-      case Some(v) => spark.conf.set(kv._1, v)
-      case None => spark.conf.unset(kv._1)
-    }
-  }
 }

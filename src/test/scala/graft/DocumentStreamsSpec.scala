@@ -477,6 +477,79 @@ class DocumentStreamsSpec extends SparkSpec {
     assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiled)
   }
 
+  private def winnowFixture() = {
+    def mkDocs(rows: Seq[(Long, String)]) =
+      rows.map { case (id, tx) => (id, tx, "en", "syn", tx.length.toLong) }
+        .toDF("doc_id", "text", "lang", "source", "n_chars")
+    def body(i: Int) = s"unique corpus narrative number $i about spark engines " +
+      s"and data curation with several shared words in sequence $i"
+    val corpus = mkDocs((0 until 20).map(i => (i.toLong, body(i))))
+    // two twins of corpus docs, three novel docs and one too short to
+    // fingerprint
+    val batch = mkDocs((100 until 103).map(i =>
+        (i.toLong, s"fresh drop story $i with its own vocabulary $i")) ++
+      Seq((1000L, body(3).replace("narrative", "account")), (1001L, body(7)),
+        (1002L, "tiny")))
+    (corpus, batch)
+  }
+
+  private def winnowStore(corpus: org.apache.spark.sql.DataFrame): String = {
+    import graft.operators.Dedup
+    val dir = java.nio.file.Files.createTempDirectory("winnow_trigger").toString
+    Dedup.saveWinnowIndexCommitted(
+      Dedup.buildWinnowIndex(corpus, "doc_id", "text"), dir)
+    dir
+  }
+
+  private def storedFps(dir: String): Set[(Long, Long, Long)] =
+    graft.operators.Dedup.loadWinnowIndexSnapshot(spark, dir).fps
+      .as[(Long, Long, Long)].collect().toSet
+
+  test("one committed winnow trigger: one fingerprinting, a driver probe, at most 5 jobs, one file") {
+    import graft.operators.{CompactionPolicy, StoreFiles}
+    val (corpus, batch) = winnowFixture()
+    val dir = winnowStore(corpus)
+    val files = StoreFiles.manifestPaths(spark, dir).size
+    val noCompaction = CompactionPolicy(maxRuns = 100)
+    // the gating probe, the pin of the admitted docs and the second
+    // fingerprinting for the append ran 10 jobs
+    val jobs = jobsOf(DocumentStreams.winnowIngestCommittedBatch(
+      spark, dir, noCompaction)(batch, 0L))
+    assert(jobs.size <= 5, s"jobs by SQL execution: $jobs")
+    assert(StoreFiles.committedBatchIds(spark, dir) == Set(0L))
+    assert(StoreFiles.manifestPaths(spark, dir).size == files + 1)
+    // the twins are rejected, the novel docs admitted
+    val ids = storedFps(dir).map(_._1)
+    assert(Set(100L, 101L, 102L).subsetOf(ids) && !ids.contains(1000L) &&
+      !ids.contains(1001L))
+  }
+
+  test("committed winnow trigger: driver and distributed probes, and a retry after a torn attempt, commit the same fps") {
+    import graft.operators.{CompactionPolicy, Dedup, StoreFiles, Stores}
+    val (corpus, batch) = winnowFixture()
+    val policy = CompactionPolicy(maxRuns = 100)
+    def ingest(budget: Long)(dir: String): String = {
+      withConf("spark.sql.autoBroadcastJoinThreshold" -> budget.toString) {
+        DocumentStreams.winnowIngestCommittedBatch(spark, dir, policy)(batch, 0L)
+      }
+      dir
+    }
+    val onDriver = storedFps(ingest(Long.MaxValue)(winnowStore(corpus)))
+    assert(storedFps(ingest(-1L)(winnowStore(corpus))) == onDriver)
+    // a torn first attempt: every fingerprint of the batch landed in the
+    // store's directory, and no manifest row committed them
+    val torn = winnowStore(corpus)
+    Dedup.buildWinnowIndex(batch, "doc_id", "text").fps
+      .write.mode("append").parquet(s"$torn/fps")
+    assert(storedFps(torn) == storedFps(winnowStore(corpus)))
+    assert(storedFps(ingest(Long.MaxValue)(torn)) == onDriver)
+    assert(StoreFiles.committedBatchIds(spark, torn) == Set(0L))
+    // the replay writes nothing
+    val stamps = parquetStamps(s"$torn/fps")
+    ingest(Long.MaxValue)(torn)
+    assert(parquetStamps(s"$torn/fps") == stamps && Stores.winnow.gen(spark, torn) == 1L)
+  }
+
   test("label ingest stream equals the batch lifecycle and replays idempotently") {
     import graft.operators.Dedup
     val docs = Tables(spark, sf, "documents")

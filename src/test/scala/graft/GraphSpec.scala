@@ -90,38 +90,66 @@ class GraphSpec extends SparkSpec {
     assert(a == b && a.nonEmpty)
   }
 
-  test("hits: the driver path equals the distributed path (budget 0)") {
+  test("hits: the edges, ranks and distributed tiers give equal results") {
     val rnd = new scala.util.Random(17)
     def inCore() = 1L + rnd.nextInt(40)
     // a random core over 1..40 (duplicates and self-loops included), pure
     // sources 100..104 citing into it, pure sinks 200..204 cited from
-    // it, and an isolated pair 300 → 301
-    val random = Seq.fill(150)((inCore(), inCore())) ++
-      (100L to 104L).flatMap(s => Seq.fill(3)((s, inCore()))) ++
-      (200L to 204L).flatMap(t => Seq.fill(2)((inCore(), t))) :+ ((300L, 301L))
+    // it, an isolated pair 300 → 301, and null endpoints: 400 and 401
+    // are nodes only through an edge whose other end is null
+    val random: Seq[(Option[Long], Option[Long])] =
+      (Seq.fill(150)((inCore(), inCore())) ++
+        (100L to 104L).flatMap(s => Seq.fill(3)((s, inCore()))) ++
+        (200L to 204L).flatMap(t => Seq.fill(2)((inCore(), t))) :+ ((300L, 301L)))
+        .map { case (a, b) => (Some(a), Some(b)) } ++
+        Seq((Some(400L), None), (None, Some(401L)), (None, None),
+          (Some(3L), None), (None, Some(3L)))
+    def some(g: Seq[(Long, Long)]) = g.map { case (a, b) => (Some(a), Some(b)) }
     val graphs = Seq(
-      Seq((1L, 3L), (2L, 3L), (1L, 4L)),
-      (1L to 30L).map(i => (i, (i * 3) % 30 + 31)),
+      some(Seq((1L, 3L), (2L, 3L), (1L, 4L))),
+      some((1L to 30L).map(i => (i, (i * 3) % 30 + 31))),
       random)
     for (g <- graphs) {
-      val onDriver = Graph.hits(g.toDF("src", "dst"), "src", "dst", 4)
-      assert(onDriver.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
-        "a small graph takes the driver path")
-      val distributed = Graph.hits(g.toDF("src", "dst"), "src", "dst", 4,
-          driverBudget = 0L)
-        .as[(Long, Long, Long)].collect().toSet
-      assert(onDriver.as[(Long, Long, Long)].collect().toSet == distributed)
-      assert(distributed.map(_._1) == g.flatMap(e => Seq(e._1, e._2)).toSet)
+      def run(budget: Long) =
+        Graph.hits(g.toDF("src", "dst"), "src", "dst", 4, driverBudget = budget)
+      val edges = run(Long.MaxValue)
+      assert(edges.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
+        "a small graph takes a driver tier")
+      // 24 bytes a collected edge and 16 a node (a null node included):
+      // one byte short of the edges takes the ranks tier
+      val nEdges = g.distinct.size
+      val nNodes = g.flatMap(e => Seq(e._1, e._2)).distinct.size
+      assert(16L * nNodes < 24L * nEdges - 1)
+      val ranks = run(24L * nEdges - 1).as[(Long, Long, Long)].collect().toSet
+      val distributed = run(0L).as[(Long, Long, Long)].collect().toSet
+      assert(edges.as[(Long, Long, Long)].collect().toSet == distributed)
+      assert(ranks == distributed)
+      assert(distributed.map(_._1) == g.flatMap(e => Seq(e._1, e._2)).flatten.toSet)
     }
   }
 
   test("hits on the driver: at most three jobs a half-round") {
-    // the distributed rounds ran about nine (AQE stages, the checkpoint
-    // and the max) per half-round
+    // the ranks tier: a budget that holds the 40 node ids (16 bytes
+    // each) but not the 30 edges (24 bytes each). The distributed rounds
+    // ran about nine jobs (AQE stages, the checkpoint and the max) per
+    // half-round
     val edges = (1L to 30L).map(i => (i, (i * 3) % 30 + 31)).toDF("src", "dst")
     val iters = 4
-    val jobs = jobsOf(Graph.hits(edges, "src", "dst", iters).collect())
+    val jobs = jobsOf(Graph.hits(edges, "src", "dst", iters,
+      driverBudget = 16L * 40 + 40).collect())
     assert(jobs.size <= 3 * 2 * iters + 6, s"jobs by SQL execution: $jobs")
+    assert(jobs.size > 8, s"the ranks tier runs jobs every half-round: $jobs")
+  }
+
+  test("hits over driver-held edges: a q197-shaped graph in at most 8 jobs") {
+    // customers (even ids) buying from suppliers (odd ids) through many
+    // line items, duplicates included, as q197 joins orders to lineitem
+    val lines = (0 until 600).map(i => ((i % 37).toLong * 2, (i * 7 % 23).toLong * 2 + 1))
+    val edges = lines.toDF("src", "dst").repartition(4)
+    val jobs = jobsOf(Graph.hits(edges, "src", "dst", iters = 4)
+      .orderBy(col("auth").desc, col("hub").desc, col("node").asc)
+      .limit(20).collect())
+    assert(jobs.size <= 8, s"jobs by SQL execution: $jobs")
   }
 
   test("bfsHops: exact hop distances on a path graph, min over multiple seeds") {

@@ -128,6 +128,117 @@ class ManifestFamiliesSpec extends SparkSpec {
       probes, "doc_id", "text", minShared = 1L, maxDf = 3L).count() == 3L)
   }
 
+  test("winnowProbeFps: the driver probe equals the distributed one (broadcasts off)") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val dir = tmp("graft_winnow_driver_probe")
+    // (id, fp_pos, fp): fp 100 held by 3 docs (id 1 at two positions),
+    // fp 200 by 4, fp 400 by 4 of which doc 7 is tombstoned below
+    val fps = (Seq(1L, 2L, 3L).map((_, 100L)) ++ Seq((1L, 100L)) ++
+      Seq(1L, 2L, 3L, 4L).map((_, 200L)) ++
+      Seq((1L, 300L), (5L, 300L), (1L, 301L), (5L, 301L)) ++
+      Seq(6L, 7L, 8L, 9L).map((_, 400L)) ++ Seq((6L, 401L)))
+      .zipWithIndex.map { case ((id, fp), i) => (id, i.toLong + 1, fp) }
+      .toDF("id", "fp_pos", "fp")
+    Dedup.saveWinnowIndexCommitted(Dedup.WinnowIndex(fps, 4, 4), dir)
+    Stores.winnow.delete(spark, dir, Seq(7L).toDF("doc_id"), "doc_id")
+    val index = Dedup.loadWinnowIndexSnapshot(spark, dir)
+    // (id_b, fp), a duplicate row included; doc 15 shares nothing
+    val batch = Seq((11L, 100L), (11L, 100L), (11L, 300L), (12L, 100L),
+      (12L, 200L), (13L, 300L), (13L, 301L), (14L, 400L), (14L, 401L),
+      (15L, 999L)).toDF("id_b", "fp")
+    def probe(b: DataFrame, minShared: Long, maxDf: Long, budget: Long) =
+      withConf("spark.sql.autoBroadcastJoinThreshold" -> budget.toString) {
+        Dedup.winnowProbeFps(index, b, minShared, maxDf)
+      }
+    val emptyBatch = batch.limit(0)
+    for (b <- Seq(batch, emptyBatch); minShared <- Seq(1L, 2L, 3L);
+        maxDf <- Seq(3L, 4L)) {
+      val onDriver = probe(b, minShared, maxDf, Long.MaxValue)
+      assert(onDriver.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+      val distributed = probe(b, minShared, maxDf, -1L)
+      // 24 bytes a row: the batch's 10 rows fit, the index's 16 do not
+      val indexOver = probe(b, minShared, maxDf, 300L)
+      assert(indexOver.queryExecution.optimizedPlan.isInstanceOf[LocalRelation] ==
+        (b eq emptyBatch))
+      for (other <- Seq(distributed, indexOver)) {
+        assert(onDriver.schema == other.schema)
+        assert(onDriver.as[(Long, Long, Long)].collect().toSet ==
+          other.as[(Long, Long, Long)].collect().toSet,
+          s"minShared $minShared, maxDf $maxDf")
+      }
+    }
+    // df exactly maxDf (100; 400 once doc 7 is out) counts, maxDf + 1
+    // (200) does not: doc 12 shares one fp with 1, minShared − 1
+    assert(probe(batch, 2L, 3L, Long.MaxValue).as[(Long, Long, Long)]
+      .collect().toSet == Set((1L, 11L, 2L), (1L, 13L, 2L), (5L, 13L, 2L),
+        (6L, 14L, 2L)))
+  }
+
+  test("winnowProbe: the driver probe equals the distributed one on texts") {
+    val dir = tmp("graft_winnow_driver_texts")
+    val corpus = Seq((1L, sA), (2L, sB), (3L, s"$sA $filler1"),
+      (4L, filler2), (5L, s"$sB $filler3")).toDF("doc_id", "text")
+    Dedup.saveWinnowIndexCommitted(
+      Dedup.buildWinnowIndex(corpus, "doc_id", "text"), dir)
+    Stores.winnow.delete(spark, dir, Seq(3L).toDF("doc_id"), "doc_id")
+    val index = Dedup.loadWinnowIndexSnapshot(spark, dir)
+    // 13 is too short to fingerprint at all
+    val probes = Seq((11L, sA), (12L, s"$filler1 $sB"), (13L, "too short"),
+      (14L, filler2)).toDF("doc_id", "text")
+    for (b <- Seq(probes, probes.limit(0), probes.filter(col("doc_id") === 13L));
+        minShared <- Seq(1L, 2L); maxDf <- Seq(1L, 2L, 50L)) {
+      def probe(budget: Long) =
+        withConf("spark.sql.autoBroadcastJoinThreshold" -> budget.toString) {
+          Dedup.winnowProbe(index, b, "doc_id", "text", minShared, maxDf)
+            .as[(Long, Long, Long)].collect().toSet
+        }
+      assert(probe(Long.MaxValue) == probe(-1L), s"minShared $minShared, maxDf $maxDf")
+    }
+    assert(Dedup.winnowProbe(index, probes, "doc_id", "text")
+      .select(col("id_a"), col("id_b")).as[(Long, Long)].collect().toSet ==
+      Set((1L, 11L), (2L, 12L), (5L, 12L), (4L, 14L)))
+  }
+
+  test("snapshotRead: the footer's schema equals schema inference, and building the read runs no job") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val emb = Tables(spark, sf, "embeddings")
+    val seed = emb.filter(col("vec_id") < 40)
+    val corpus = Seq((1L, sA), (2L, filler1), (3L, filler2), (4L, filler3))
+      .toDF("doc_id", "text")
+    val band = tmp("graft_read_band")
+    Dedup.saveBandIndexCommitted(Dedup.buildBandIndex(corpus, "doc_id", "text"), band)
+    val postings = tmp("graft_read_postings")
+    Retrieval.savePostingsIndexCommitted(
+      Retrieval.buildPostingsIndex(corpus, "doc_id", "text"), postings)
+    val ivf = tmp("graft_read_ivf")
+    Similarity.saveIvfIndexCommitted(
+      Similarity.buildIvfIndex(seed, "vec_id", "embedding"), ivf)
+    val pq = tmp("graft_read_pq")
+    Similarity.savePqIndexCommitted(
+      Similarity.buildPqIndex(seed, "vec_id", "embedding"), pq)
+    // a file written from a local relation whose columns are not nullable
+    val winnow = tmp("graft_read_winnow")
+    Dedup.saveWinnowIndexCommitted(Dedup.WinnowIndex(spark.createDataFrame(
+      java.util.List.of(Row(1L, 1L, 7L), Row(2L, 3L, 9L)),
+      StructType(Seq("id", "fp_pos", "fp").map(StructField(_, LongType, nullable = false)))),
+      4, 4), winnow)
+    val subs = Seq(band -> "bands", band -> "sets", postings -> "postings",
+      postings -> "stats", ivf -> "assignments", pq -> "codes", winnow -> "fps")
+    for ((dir, sub) <- subs) {
+      val paths = StoreFiles.manifestPaths(spark, dir).filter(_.contains(s"/$sub/"))
+      val inferred = spark.read.option("basePath", s"$dir/$sub").parquet(paths: _*)
+      var read: DataFrame = null
+      val jobs = jobsOf { read = StoreFiles.snapshotRead(spark, dir, sub) }
+      assert(jobs.isEmpty, s"$sub: $jobs")
+      assert(read.schema == inferred.schema, sub)
+      assert(read.collect().map(_.toString).sorted.sameElements(
+        inferred.collect().map(_.toString).sorted), sub)
+    }
+    assert(StoreFiles.snapshotRead(spark, band, "bands").columns.last == "band")
+    assert(StoreFiles.snapshotRead(spark, ivf, "assignments").columns.last == "cell")
+  }
+
   test("simhash index: torn append invisible to snapshot; vacuum converges raw") {
     val dir = tmp("graft_simhash_manifest")
     val corpus = Seq((1L, sA), (2L, filler1)).toDF("doc_id", "text")

@@ -35,6 +35,16 @@ trait SparkSpec extends AnyFunSuite {
       .map(f => f.getPath -> f.lastModified()).toMap
   }
 
+  /** `f` with the session setting `kv` in force, the old value restored. */
+  def withConf[T](kv: (String, String))(f: => T): T = {
+    val old = spark.conf.getOption(kv._1)
+    spark.conf.set(kv._1, kv._2)
+    try f finally old match {
+      case Some(v) => spark.conf.set(kv._1, v)
+      case None => spark.conf.unset(kv._1)
+    }
+  }
+
   /** The jobs `action` launches, as the SQL execution id each ran under,
     * read after the listener bus is drained.
     */
